@@ -1,4 +1,4 @@
-"""Benchmark harness: times the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: times every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 compact JSON line {"metric": ..., "value": total_sec, "unit": "sec",
 "n_queries": N, "queries": {name: sec, ...}, "sf": ...}.  The

@@ -1012,7 +1012,9 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s.n_tokens").alias("n_tokens"),
             (
                 F.floor(
-                    F.col("s.n_docs").cast("double") * 1000000 / F.col("_raw")
+                    # NULL share, not an ANSI DIVIDE_BY_ZERO, on no documents
+                    F.col("s.n_docs").cast("double") * 1000000
+                    / F.nullif("_raw", F.lit(0))
                     + F.lit(0.5)
                 )
                 / F.lit(1e6)

@@ -16,6 +16,9 @@ from ..datasets import load
 from ..num import DEC, davg
 from ..operators import curation as _curation_ops
 from ..operators import dedup, similarity, text, transforms
+# reset_shared_caches and shared_tiers are re-exported: bench.py,
+# tools/perf_probe.py and perfbench import them from this module
+from .tiers import reset_shared_caches, shared_tier, shared_tiers  # noqa: F401
 
 NORM_SQL = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 JACCARD_THRESHOLD = 0.8
@@ -702,17 +705,12 @@ WHERE doc_id NOT IN (SELECT id_b FROM losers)
 
 
 # ---------------------------------------------------------------------------
-# #63 dedup clusters: connected components over the near-dup pair graph
-# (delta-iteration analog — operators/graph.py; reference
-# flink_typora.md:885 Delta Iteration)
-
-import weakref as _weakref
-
-_SHINGLE_TIER_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
+# Shared staging tiers, in derivation order (plans/tiers.py holds the
+# memo, the reset and the consumer lookup; consumers declare the tiers
+# they read with register(..., tiers=...) in registry.py).
 
 
+@shared_tier("doc_shingle_tier")
 def _shared_shingle_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus shingle staging tier: (doc_id, _sh, _n) — each
     document's distinct k=3 word-shingle array plus its size — computed
@@ -727,62 +725,136 @@ def _shared_shingle_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost. This tier is the materialized staging table a production
     dedup pipeline writes once and every report reads (guide §2.4);
     every consumer's plan now shows a ``Scan ExistingRDD`` where the
-    shingling Project used to be.
-
-    Same lifecycle as the pair memo: weak per-session key, 2-sf_dir
-    cap (oldest evicted), cleared by :func:`reset_shared_caches` so
-    bench re-pays + TIMES the build once per pass as its own evidence
-    line. The checkpoint is corpus-sized (arrays of shingles), the
-    price a staging table always pays — bounded by ~3× the text bytes,
-    and at 100 TB it replaces 3-5 full interpreted corpus passes."""
-    per_sess = _SHINGLE_TIER_MEMO.setdefault(spark, {})
-    key = (sf_dir, 3)
-    if key not in per_sess:
-        while len(per_sess) >= 2:
-            per_sess.pop(next(iter(per_sess)))  # oldest entry; GC frees blocks
-        docs = load(spark, sf_dir, "documents")
-        sh = dedup.doc_shingle_frame(docs, "doc_id", "text", k=3)
-        per_sess[key] = sh.localCheckpoint(eager=True)
-    return per_sess[key]
+    shingling Project used to be. The checkpoint is corpus-sized
+    (arrays of shingles), the price a staging table always pays —
+    bounded by ~3× the text bytes, and at 100 TB it replaces 3-5 full
+    interpreted corpus passes."""
+    docs = load(spark, sf_dir, "documents")
+    sh = dedup.doc_shingle_frame(docs, "doc_id", "text", k=3)
+    return sh.localCheckpoint(eager=True)
 
 
-# Direct consumers of the shingle tier. The pair tier derives from it
-# (so every pair-tier consumer depends on it transitively — covered by
-# bench's skip logic exactly like the pair→cluster chain); the
-# cross-module curation consumers (decontaminate_neardup,
-# curation_funnel) are pinned via _TRANSITIVE_TIER_CONSUMERS in
-# tests/test_bench_contract.py.
-_SHINGLE_TIER_CONSUMER_FNS = frozenset({
-    "dedup_containment",
-    "dedup_minhash_lsh",
-    "ngram_novelty",
-    "decontaminate",
-    "decontaminate_neardup",
-    "curation_funnel",
-    # the pair-tier builder derives from this tier; its consumers are
-    # listed under _PAIR_TIER_CONSUMER_FNS
-    "_shared_pair_tier",
-})
-
-
-def shingle_tier_consumers() -> tuple[str, ...]:
-    """Registered query names that consume the shared shingle tier
-    directly, in CURRENT registry order (same contract as
-    :func:`pair_tier_consumers`)."""
-    from ..registry import all_queries
-
-    return tuple(
-        name
-        for name, q in all_queries().items()
-        if q.fn.__name__ in _SHINGLE_TIER_CONSUMER_FNS
+@shared_tier("ppjoin_pair_tier")
+def _shared_pair_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The PPJoin near-dup pair tier (id_a, id_b at the module
+    threshold), computed ONCE per (session, sf_dir) and eagerly
+    localCheckpointed, then reused by every consumer — both CC
+    formulations (#63 label-propagation, #63b large/small-star) iterate
+    over the SAME edge set, so re-deriving the prefix-filtered join per
+    invocation doubled the most expensive work in the suite (VERDICT
+    r3 #8). Derives from the shingle tier. The checkpoint is
+    pair-tier-sized (edges, not corpus); at 100 TB this is the same
+    pattern as materializing the edge list to a table between stages
+    of a production CC run."""
+    pairs = dedup.ngram_jaccard_pairs_from_shingles(
+        _shared_shingle_tier(spark, sf_dir), "doc_id",
+        threshold=JACCARD_THRESHOLD,
     )
+    # jaccard rides along: the cluster-stats report (#112) needs it,
+    # and edge-only consumers just project it away from the checkpoint
+    return pairs.select("id_a", "id_b", "jaccard").localCheckpoint(eager=True)
 
 
-_GATE_TIER_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
+@shared_tier("cc_labels_tier")
+def _shared_cluster_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The connected-component labels (vertex, component) over the
+    shared pair tier, computed ONCE per (session, sf_dir) — round-12
+    measurement: SEVEN queries (dedup_clusters, dedup_cluster_stats,
+    dedup_survivors_quality, split_repair, and the three curation
+    audits) each re-ran the full iterative CC loop (edge checkpoint +
+    per-round join/aggregate/convergence-collect jobs) over the SAME
+    edge set per bench pass. connected_components already returns an
+    eagerly localCheckpointed, vertex-count-bounded frame, so the memo
+    just holds that reference."""
+    from ..operators import graph
+
+    pairs = _shared_pair_tier(spark, sf_dir)
+    return graph.connected_components(pairs, src="id_a", dst="id_b")
 
 
+@shared_tier("bm25_topn_tier")
+def _shared_bm25_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The BM25 top-N frame (#127's output), computed ONCE per
+    (session, sf_dir) and eagerly localCheckpointed — #210's hybrid
+    fusion consumes the SAME retrieval as the standalone BM25 query,
+    and the two corpus token scans behind it are the expensive part
+    (~1.7 s at sf0.1), so re-deriving them per consumer would repeat
+    the pair-tier mistake (r3 #8). The checkpoint is N=20 rows —
+    trivially bounded."""
+    return _bm25_topn(spark, sf_dir).localCheckpoint(eager=True)
+
+
+def dense_tier_k() -> int:
+    """Rank depth of the shared dense tier: deep enough that EVERY
+    consumer's top-K is an exact prefix (the ranking is a total order —
+    cosine DESC, neighbor_id — so filtering rank <= k on a deeper list
+    is identical to ranking at k directly)."""
+    return max(KNN_K, RRF_TOP_N, MMR_POOL)
+
+
+@shared_tier("dense_topk_tier")
+def _shared_dense_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The brute-force dense top-K lists (#42's scorer) for the bounded
+    query set ``vec_id < KNN_QUERY_MAX_ID``, at rank depth
+    :func:`dense_tier_k`, computed ONCE per (session, sf_dir) and
+    eagerly localCheckpointed (third shared tier, r8 verdict ask #2).
+    Six queries re-derived this exact corpus cosine scan per
+    invocation — q_knn_bruteforce, q_knn_label_purity, q_ann_recall
+    (its baseline side), q_hybrid_rrf / q_retrieval_overlap /
+    q_mmr_rerank (the RRF_QUERY_VEC_ID slice) — ~2-3 s/pass at sf0.1.
+    The checkpoint is ≤ KNN_QUERY_MAX_ID · dense_tier_k() rows (200) —
+    trivially bounded. q_hard_negatives is NOT a consumer: its
+    different-label predicate filters BEFORE the top-K, so its lists
+    are not derivable from the unfiltered tier."""
+    emb = load(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)
+    return similarity.knn_bruteforce(
+        emb, queries, k=dense_tier_k()
+    ).localCheckpoint(eager=True)
+
+
+@shared_tier("lsh_topk_tier")
+def _shared_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The LSH approximate top-K lists (#43's output) for the bounded
+    query set, checkpointed once per (session, sf_dir) — consumed
+    identically by q_knn_lsh and q_ann_recall's LSH branch, which each
+    re-derived the 16-table × 6-plane bucketing scan (~1.3 s at sf0.1).
+    ≤ KNN_QUERY_MAX_ID · KNN_K rows."""
+    emb = load(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)
+    return similarity.knn_lsh(
+        emb, queries, k=KNN_K, planes=LSH_PLANES, tables=LSH_TABLES,
+        dim=EMB_DIM,
+    ).localCheckpoint(eager=True)
+
+
+@shared_tier("ivf_topk_tier")
+def _shared_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The IVF-Flat approximate top-K lists (#43b's output) for the
+    bounded query set, checkpointed once per (session, sf_dir) —
+    consumed identically by q_knn_ivf and q_ann_recall's IVF branch
+    (each previously re-derived the centroid scoring + probe scan,
+    ~1.0 s at sf0.1). q_ivf_balance is NOT a consumer: it needs the
+    full-corpus list ASSIGNMENT, not the query top-K."""
+    emb = load(spark, sf_dir, "embeddings")
+    queries = emb.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)
+    return similarity.knn_ivf(
+        emb, queries, k=KNN_K, nlist=IVF_NLIST, nprobe=IVF_NPROBE
+    ).localCheckpoint(eager=True)
+
+
+@shared_tier("bpe_merges_tier")
+def _shared_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The learned merge table (#233's output), computed ONCE per
+    (session, sf_dir) — the corpus word-count scan + 6 argmax rounds
+    behind it (~1.8 s at sf0.1) are consumed identically by
+    q_bpe_merges and the #233b encoder q_bpe_encode, which applies the
+    table map-side. ≤ BPE_ROUNDS rows (driver-local by construction —
+    each round collects exactly one argmax row)."""
+    return _bpe_merges_impl(spark, sf_dir).localCheckpoint(eager=True)
+
+
+@shared_tier("gate_features_tier")
 def _shared_gate_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Gopher-gate + quality-feature staging tier: every document's
     repetition/shape features + keep flag (operators/curation.
@@ -799,417 +871,18 @@ def _shared_gate_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass (guide §2.4 staging table) replaces up to six. Exactly the
     v2 feature chain (repetition_features carry=text →
     quality_features), so every consumer reads IDENTICAL values to the
-    expressions it previously computed inline. Same lifecycle as the
-    other memos: weak per-session key, 2-sf_dir cap, oldest evicted;
-    cleared by :func:`reset_shared_caches` so bench re-pays + times
-    the build once per pass as its own evidence line."""
-    per_sess = _GATE_TIER_MEMO.setdefault(spark, {})
-    if sf_dir not in per_sess:
-        while len(per_sess) >= 2:
-            per_sess.pop(next(iter(per_sess)))  # oldest entry; GC frees blocks
-        docs = load(spark, sf_dir, "documents")
-        feats = _curation_ops.repetition_features(
-            docs, "doc_id", "text", carry=("text",)
-        )
-        per_sess[sf_dir] = text.quality_features(feats, "text").localCheckpoint(
-            eager=True
-        )
-    return per_sess[sf_dir]
-
-
-# Direct llm_pipeline consumers of the gate tier; the five
-# plans/curation.py consumers (gopher_quality, curation_pipeline,
-# curation_pipeline_v2, repaired_split_balance, curation_funnel) call
-# it cross-module and are pinned via _TRANSITIVE_TIER_CONSUMERS in
-# tests/test_bench_contract.py.
-_GATE_TIER_CONSUMER_FNS = frozenset({
-    "quality_score",
-    "gopher_quality",
-    "curation_pipeline",
-    "curation_pipeline_v2",
-    "repaired_split_balance",
-    "curation_funnel",
-})
-
-
-def gate_tier_consumers() -> tuple[str, ...]:
-    """Registered query names that consume the shared gate-features
-    tier, in CURRENT registry order (same contract as
-    :func:`pair_tier_consumers`)."""
-    from ..registry import all_queries
-
-    return tuple(
-        name
-        for name, q in all_queries().items()
-        if q.fn.__name__ in _GATE_TIER_CONSUMER_FNS
+    expressions it previously computed inline."""
+    docs = load(spark, sf_dir, "documents")
+    feats = _curation_ops.repetition_features(
+        docs, "doc_id", "text", carry=("text",)
     )
+    return text.quality_features(feats, "text").localCheckpoint(eager=True)
 
 
-_PAIR_TIER_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
-def _shared_pair_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PPJoin near-dup pair tier (id_a, id_b at the module
-    threshold), computed ONCE per (session, sf_dir) and eagerly
-    localCheckpointed, then reused by every consumer — both CC
-    formulations (#63 label-propagation, #63b large/small-star) iterate
-    over the SAME edge set, so re-deriving the prefix-filtered join per
-    invocation doubled the most expensive work in the suite (VERDICT
-    r3 #8).
-
-    Lifecycle: the memo is keyed weakly by SparkSession (dropped with
-    the session) and capped at 2 sf_dirs, evicting the LEAST-recently
-    inserted (dict order; review r4 — popitem() would evict the newest
-    and keep the stalest). Eviction releases the checkpoint blocks by
-    dropping the only reference: ``unpersist()`` is a no-op for
-    localCheckpointed frames (their blocks live in RDD storage, not the
-    CacheManager), so the actual free happens when GC + ContextCleaner
-    collect the dropped RDD — eventual, and bounded because the blocks
-    are pair-tier-sized (edges, not corpus). At 100 TB this is the
-    same pattern as materializing the edge list to a table between
-    stages of a production CC run."""
-    per_sess = _PAIR_TIER_MEMO.setdefault(spark, {})
-    key = (sf_dir, 3, JACCARD_THRESHOLD)
-    if key not in per_sess:
-        while len(per_sess) >= 2:
-            per_sess.pop(next(iter(per_sess)))  # oldest entry; GC frees blocks
-        pairs = dedup.ngram_jaccard_pairs_from_shingles(
-            _shared_shingle_tier(spark, sf_dir), "doc_id",
-            threshold=JACCARD_THRESHOLD,
-        )
-        # jaccard rides along: the cluster-stats report (#112) needs it,
-        # and edge-only consumers just project it away from the checkpoint
-        per_sess[key] = pairs.select("id_a", "id_b", "jaccard").localCheckpoint(eager=True)
-    return per_sess[key]
-
-
-# Plan functions that consume the shared tier. STATIC so additions are
-# a reviewed edit (test_bench_contract derives the true set from source
-# and pins this); the REGISTRY-ORDERED query names come from
-# pair_tier_consumers() — the registry self-orders per round since r8,
-# so a hand-ordered name tuple would silently drift.
-_PAIR_TIER_CONSUMER_FNS = frozenset({
-    "adamic_adar_links",
-    "local_clustering_dupgraph",
-    "dup_rate_by_source",
-    "dedup_clusters_star",
-    "pagerank_dupgraph",
-    "dedup_cluster_stats",
-    "triangle_census",
-    "dupgraph_degrees",
-    "dedup_survivors",
-    "lpa_communities",
-    "kcore_dupgraph",
-    "dupgraph_assortativity",
-    "dedup_ngram_jaccard",
-    "dedup_threshold_sweep",
-    "split_leakage",
-    # the CC-label tier builder derives from the pair tier; its query
-    # consumers (dedup_clusters & co.) are listed under
-    # _CLUSTER_TIER_CONSUMER_FNS instead — a cold pair memo implies a
-    # cold cluster memo, so bench's skip logic still covers them
-    "_shared_cluster_tier",
-})
-
-
-def pair_tier_consumers() -> tuple[str, ...]:
-    """Registered query names that consume the shared pair tier, in
-    CURRENT registry order — the first one to run in a bench pass pays
-    the tier build (bench.py records this in BENCH_EVIDENCE.json)."""
-    from ..registry import all_queries
-
-    return tuple(
-        name
-        for name, q in all_queries().items()
-        if q.fn.__name__ in _PAIR_TIER_CONSUMER_FNS
-    )
-
-
-_BM25_TIER_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
-def _shared_bm25_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BM25 top-N frame (#127's output), computed ONCE per
-    (session, sf_dir) and eagerly localCheckpointed — #210's hybrid
-    fusion consumes the SAME retrieval as the standalone BM25 query,
-    and the two corpus token scans behind it are the expensive part
-    (~1.7 s at sf0.1), so re-deriving them per consumer would repeat
-    the pair-tier mistake (r3 #8). The checkpoint is N=20 rows —
-    trivially bounded. Same lifecycle as the pair memo: weak per-
-    session key, 2-sf_dir cap, oldest evicted."""
-    per_sess = _BM25_TIER_MEMO.setdefault(spark, {})
-    if sf_dir not in per_sess:
-        while len(per_sess) >= 2:
-            per_sess.pop(next(iter(per_sess)))
-        per_sess[sf_dir] = _bm25_topn(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
-    return per_sess[sf_dir]
-
-
-_BM25_TIER_CONSUMER_FNS = frozenset(
-    {"bm25_search", "hybrid_rrf", "retrieval_overlap", "rbo_overlap",
-     "rerank_inference"}  # consumes the tier via hybrid_rrf's fusion
-)
-
-
-def bm25_tier_consumers() -> tuple[str, ...]:
-    """Registered query names that consume the shared BM25 top-N tier,
-    in CURRENT registry order (same contract as
-    :func:`pair_tier_consumers`)."""
-    from ..registry import all_queries
-
-    return tuple(
-        name
-        for name, q in all_queries().items()
-        if q.fn.__name__ in _BM25_TIER_CONSUMER_FNS
-    )
-
-
-_DENSE_TIER_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
-def dense_tier_k() -> int:
-    """Rank depth of the shared dense tier: deep enough that EVERY
-    consumer's top-K is an exact prefix (the ranking is a total order —
-    cosine DESC, neighbor_id — so filtering rank <= k on a deeper list
-    is identical to ranking at k directly)."""
-    return max(KNN_K, RRF_TOP_N, MMR_POOL)
-
-
-def _shared_dense_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The brute-force dense top-K lists (#42's scorer) for the bounded
-    query set ``vec_id < KNN_QUERY_MAX_ID``, at rank depth
-    :func:`dense_tier_k`, computed ONCE per (session, sf_dir) and
-    eagerly localCheckpointed (third shared tier, r8 verdict ask #2).
-    Six queries re-derived this exact corpus cosine scan per
-    invocation — q_knn_bruteforce, q_knn_label_purity, q_ann_recall
-    (its baseline side), q_hybrid_rrf / q_retrieval_overlap /
-    q_mmr_rerank (the RRF_QUERY_VEC_ID slice) — ~2-3 s/pass at sf0.1.
-    The checkpoint is ≤ KNN_QUERY_MAX_ID · dense_tier_k() rows (200) —
-    trivially bounded. q_hard_negatives is NOT a consumer: its
-    different-label predicate filters BEFORE the top-K, so its lists
-    are not derivable from the unfiltered tier. Same lifecycle as the
-    other memos: weak per-session key, 2-sf_dir cap, oldest evicted."""
-    per_sess = _DENSE_TIER_MEMO.setdefault(spark, {})
-    if sf_dir not in per_sess:
-        while len(per_sess) >= 2:
-            per_sess.pop(next(iter(per_sess)))
-        emb = load(spark, sf_dir, "embeddings")
-        queries = emb.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)
-        per_sess[sf_dir] = similarity.knn_bruteforce(
-            emb, queries, k=dense_tier_k()
-        ).localCheckpoint(eager=True)
-    return per_sess[sf_dir]
-
-
-_DENSE_TIER_CONSUMER_FNS = frozenset({
-    "knn_bruteforce",
-    "knn_label_purity",
-    "ann_recall",
-    "hybrid_rrf",
-    "retrieval_overlap",
-    "mmr_rerank",
-    "rbo_overlap",
-    "rerank_inference",  # consumes the tier via hybrid_rrf's fusion
-})
-
-
-def dense_tier_consumers() -> tuple[str, ...]:
-    """Registered query names that consume the shared dense top-K tier,
-    in CURRENT registry order (same contract as
-    :func:`pair_tier_consumers`)."""
-    from ..registry import all_queries
-
-    return tuple(
-        name
-        for name, q in all_queries().items()
-        if q.fn.__name__ in _DENSE_TIER_CONSUMER_FNS
-    )
-
-
-_LSH_TIER_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
-def _shared_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The LSH approximate top-K lists (#43's output) for the bounded
-    query set, checkpointed once per (session, sf_dir) — consumed
-    identically by q_knn_lsh and q_ann_recall's LSH branch, which each
-    re-derived the 16-table × 6-plane bucketing scan (~1.3 s at sf0.1).
-    ≤ KNN_QUERY_MAX_ID · KNN_K rows; same lifecycle as the other memos."""
-    per_sess = _LSH_TIER_MEMO.setdefault(spark, {})
-    if sf_dir not in per_sess:
-        while len(per_sess) >= 2:
-            per_sess.pop(next(iter(per_sess)))
-        emb = load(spark, sf_dir, "embeddings")
-        queries = emb.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)
-        per_sess[sf_dir] = similarity.knn_lsh(
-            emb, queries, k=KNN_K, planes=LSH_PLANES, tables=LSH_TABLES,
-            dim=EMB_DIM,
-        ).localCheckpoint(eager=True)
-    return per_sess[sf_dir]
-
-
-_LSH_TIER_CONSUMER_FNS = frozenset({"knn_lsh", "ann_recall"})
-
-
-def lsh_tier_consumers() -> tuple[str, ...]:
-    from ..registry import all_queries
-
-    return tuple(
-        name
-        for name, q in all_queries().items()
-        if q.fn.__name__ in _LSH_TIER_CONSUMER_FNS
-    )
-
-
-_IVF_TIER_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
-def _shared_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IVF-Flat approximate top-K lists (#43b's output) for the
-    bounded query set, checkpointed once per (session, sf_dir) —
-    consumed identically by q_knn_ivf and q_ann_recall's IVF branch
-    (each previously re-derived the centroid scoring + probe scan,
-    ~1.0 s at sf0.1). q_ivf_balance is NOT a consumer: it needs the
-    full-corpus list ASSIGNMENT, not the query top-K."""
-    per_sess = _IVF_TIER_MEMO.setdefault(spark, {})
-    if sf_dir not in per_sess:
-        while len(per_sess) >= 2:
-            per_sess.pop(next(iter(per_sess)))
-        emb = load(spark, sf_dir, "embeddings")
-        queries = emb.filter(F.col("vec_id") < KNN_QUERY_MAX_ID)
-        per_sess[sf_dir] = similarity.knn_ivf(
-            emb, queries, k=KNN_K, nlist=IVF_NLIST, nprobe=IVF_NPROBE
-        ).localCheckpoint(eager=True)
-    return per_sess[sf_dir]
-
-
-_IVF_TIER_CONSUMER_FNS = frozenset({"knn_ivf", "ann_recall"})
-
-
-def ivf_tier_consumers() -> tuple[str, ...]:
-    from ..registry import all_queries
-
-    return tuple(
-        name
-        for name, q in all_queries().items()
-        if q.fn.__name__ in _IVF_TIER_CONSUMER_FNS
-    )
-
-
-def shared_tiers() -> dict[str, tuple]:
-    """Every memoized shared tier: name → (builder, consumer names in
-    registry order). bench.py re-pays + times each build once per pass
-    (its own evidence line, included in the stdout total) so per-query
-    samples are warm-memo and the build cost is attributed explicitly
-    instead of landing on whichever consumer runs first."""
-    return {
-        # derivation order: shingle tier FIRST (the pair tier derives
-        # from it), then pair, then cluster — each build line then
-        # times only its OWN derivation, not its upstream tier's.
-        # Attribution caveat (advice r12): if an upstream build fails
-        # BOTH bench attempts but succeeds inside a downstream
-        # builder's internal retry, that downstream build line silently
-        # includes the upstream build for the pass while the upstream
-        # tier's own consumers are skipped — rare (needs two transient
-        # failures then a success seconds apart) and visible in the
-        # evidence (errors carries the _build row, skipped_by_pass the
-        # consumers).
-        "doc_shingle_tier": (_shared_shingle_tier, shingle_tier_consumers()),
-        "ppjoin_pair_tier": (_shared_pair_tier, pair_tier_consumers()),
-        "cc_labels_tier": (_shared_cluster_tier, cluster_tier_consumers()),
-        "bm25_topn_tier": (_shared_bm25_tier, bm25_tier_consumers()),
-        "dense_topk_tier": (_shared_dense_topk, dense_tier_consumers()),
-        "lsh_topk_tier": (_shared_lsh_topk, lsh_tier_consumers()),
-        "ivf_topk_tier": (_shared_ivf_topk, ivf_tier_consumers()),
-        "bpe_merges_tier": (_shared_bpe_merges, bpe_tier_consumers()),
-        "gate_features_tier": (_shared_gate_tier, gate_tier_consumers()),
-    }
-
-
-def reset_shared_caches() -> None:
-    """Drop every memoized shared tier. bench.py calls this before each
-    timing pass so each tier derivation is re-paid (and therefore
-    VISIBLE in the timings) once per pass instead of once per process —
-    min-across-passes then always includes one build (advice r4: the
-    memo otherwise excluded the dominant build from every
-    post-first-invocation sample)."""
-    _SHINGLE_TIER_MEMO.clear()
-    _GATE_TIER_MEMO.clear()
-    _PAIR_TIER_MEMO.clear()
-    _CLUSTER_TIER_MEMO.clear()
-    _BM25_TIER_MEMO.clear()
-    _DENSE_TIER_MEMO.clear()
-    _LSH_TIER_MEMO.clear()
-    _IVF_TIER_MEMO.clear()
-    _BPE_TIER_MEMO.clear()
-
-
-_CLUSTER_TIER_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
-def _shared_cluster_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The connected-component labels (vertex, component) over the
-    shared pair tier, computed ONCE per (session, sf_dir) — round-12
-    measurement: SEVEN queries (dedup_clusters, dedup_cluster_stats,
-    dedup_survivors_quality, split_repair, and the three curation
-    audits) each re-ran the full iterative CC loop (edge checkpoint +
-    per-round join/aggregate/convergence-collect jobs) over the SAME
-    edge set per bench pass. connected_components already returns an
-    eagerly localCheckpointed, vertex-count-bounded frame, so the memo
-    just holds that reference. Same lifecycle as the other memos:
-    weak per-session key, 2-sf_dir cap, oldest evicted; cleared by
-    :func:`reset_shared_caches` so bench re-pays + times the build
-    once per pass as its own evidence line."""
-    from ..operators import graph
-
-    per_sess = _CLUSTER_TIER_MEMO.setdefault(spark, {})
-    if sf_dir not in per_sess:
-        while len(per_sess) >= 2:
-            per_sess.pop(next(iter(per_sess)))
-        pairs = _shared_pair_tier(spark, sf_dir)
-        per_sess[sf_dir] = graph.connected_components(
-            pairs, src="id_a", dst="id_b"
-        )
-    return per_sess[sf_dir]
-
-
-_CLUSTER_TIER_CONSUMER_FNS = frozenset({
-    "dedup_clusters",
-    "dedup_cluster_stats",
-    # transitive via dedup_clusters (cross-module for the curation trio)
-    "dedup_survivors_quality",
-    "split_repair",
-    "curation_pipeline_v2",
-    "repaired_split_balance",
-    "curation_funnel",
-})
-
-
-def cluster_tier_consumers() -> tuple[str, ...]:
-    """Registered query names that consume the shared CC-label tier,
-    in CURRENT registry order (same contract as
-    :func:`pair_tier_consumers`)."""
-    from ..registry import all_queries
-
-    return tuple(
-        name
-        for name, q in all_queries().items()
-        if q.fn.__name__ in _CLUSTER_TIER_CONSUMER_FNS
-    )
+# ---------------------------------------------------------------------------
+# #63 dedup clusters: connected components over the near-dup pair graph
+# (delta-iteration analog — operators/graph.py; reference
+# flink_typora.md:885 Delta Iteration)
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2772,7 +2445,10 @@ def dupgraph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nodes",
         "n_edges",
         "max_degree",
-        F.round(2.0 * F.col("n_edges") / F.col("n_nodes"), 9).alias("mean_degree"),
+        # NULL, not an ANSI DIVIDE_BY_ZERO, on a graph with no edges
+        F.round(2.0 * F.col("n_edges") / F.nullif("n_nodes", F.lit(0)), 9).alias(
+            "mean_degree"
+        ),
         F.round(1.0 + F.col("n_nodes") / F.col("sum_ln"), 6).alias("alpha_hill"),
     )
 
@@ -5593,42 +5269,6 @@ BPE_VOCAB = 200
 BPE_ROUNDS = 6
 
 
-_BPE_TIER_MEMO: "_weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    _weakref.WeakKeyDictionary()
-)
-
-
-def _shared_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The learned merge table (#233's output), computed ONCE per
-    (session, sf_dir) — the corpus word-count scan + 6 argmax rounds
-    behind it (~1.8 s at sf0.1) are consumed identically by
-    q_bpe_merges and the #233b encoder q_bpe_encode, which applies the
-    table map-side. ≤ BPE_ROUNDS rows (driver-local by construction —
-    each round collects exactly one argmax row). Same lifecycle as the
-    other memos: weak per-session key, 2-sf_dir cap, oldest evicted."""
-    per_sess = _BPE_TIER_MEMO.setdefault(spark, {})
-    if sf_dir not in per_sess:
-        while len(per_sess) >= 2:
-            per_sess.pop(next(iter(per_sess)))
-        per_sess[sf_dir] = _bpe_merges_impl(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
-    return per_sess[sf_dir]
-
-
-_BPE_TIER_CONSUMER_FNS = frozenset({"bpe_merges", "bpe_encode"})
-
-
-def bpe_tier_consumers() -> tuple[str, ...]:
-    from ..registry import all_queries
-
-    return tuple(
-        name
-        for name, q in all_queries().items()
-        if q.fn.__name__ in _BPE_TIER_CONSUMER_FNS
-    )
-
-
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shared_bpe_merges(spark, sf_dir)
 
@@ -5899,9 +5539,9 @@ BPE_ENCODE_SQL = _bpe_encode_sql()
 def rerank_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consumes the fused #210 list, itself served from the shared
     BM25 / dense retrieval memos — a TRANSITIVE tier consumption,
-    recorded in tests/test_bench_contract._TRANSITIVE_TIER_CONSUMERS
-    so bench's warm-memo accounting sees it (advice r10: this fact
-    must not live in docstring tokens). The two unpartitioned rank
+    declared with ``tiers=`` at its registration (plans/tiers.py) so
+    bench's warm-memo accounting sees it, and checked at run time by
+    tests/test_tiers.py. The two unpartitioned rank
     windows run over the same ≤RRF_TOP_N-row frame (hybrid_rrf's
     bounded-frame proof)."""
     from pyspark.sql import Window

@@ -23,18 +23,18 @@ class Query:
     name: str
     fn: QueryFn
     oracle: str | None  # ANSI SQL runnable by DuckDB; None → rows-only check
-    headline: bool = False  # included in bench.py timings
+    tiers: tuple[str, ...] = ()  # shared tiers it reads (plans/tiers.py)
 
 
 _REGISTRY: dict[str, Query] = {}
 
 
 def register(
-    name: str, fn: QueryFn, oracle: str | None = None, headline: bool = False
+    name: str, fn: QueryFn, oracle: str | None = None, tiers: tuple[str, ...] = ()
 ) -> None:
     if name in _REGISTRY:
         raise ValueError(f"duplicate query name {name!r}")
-    _REGISTRY[name] = Query(name, fn, oracle, headline)
+    _REGISTRY[name] = Query(name, fn, oracle, tiers)
 
 
 def all_queries() -> dict[str, Query]:
@@ -152,6 +152,13 @@ def _populate() -> None:
     from .plans import order_stats as os_
     from .plans import tpch
 
+    # shared staging tiers (plans/tiers.py), declared on every consumer
+    shingle, pair, cc = "doc_shingle_tier", "ppjoin_pair_tier", "cc_labels_tier"
+    bm25, dense, lsh, ivf = (
+        "bm25_topn_tier", "dense_topk_tier", "lsh_topk_tier", "ivf_topk_tier"
+    )
+    bpe, gate = "bpe_merges_tier", "gate_features_tier"
+
     # ---- round-12 registrations (3 new, under the ≤4 cap of VERDICT
     # r11 ask #2 so 46 window slots rotate the r7-stale greens):
     # the curation pipeline v2 composes the round-11 hygiene the
@@ -162,13 +169,20 @@ def _populate() -> None:
         "q_curation_pipeline_v2",
         cur.curation_pipeline_v2,
         cur.CURATION_PIPELINE_V2_SQL,
+        tiers=(cc, gate),
     )
     register(
         "q_repaired_split_balance",
         cur.repaired_split_balance,
         cur.REPAIRED_SPLIT_BALANCE_SQL,
+        tiers=(cc, gate),
     )
-    register("q_curation_funnel", cur.curation_funnel, cur.CURATION_FUNNEL_SQL)
+    register(
+        "q_curation_funnel",
+        cur.curation_funnel,
+        cur.CURATION_FUNNEL_SQL,
+        tiers=(shingle, cc, gate),
+    )
 
     # ---- round-11 registrations (VERDICT r10 asks #3/#4: the BPE
     # encoder closes the tokenizer train→apply→audit loop by
@@ -178,16 +192,17 @@ def _populate() -> None:
     # on top of the #43b coarse quantizer. They lead the window as
     # never-driver-checked; the remaining slots rotate the r6-stale
     # greens first (ask #2). ----
-    register("q_bpe_encode", llm.bpe_encode, llm.BPE_ENCODE_SQL)
+    register("q_bpe_encode", llm.bpe_encode, llm.BPE_ENCODE_SQL, tiers=(bpe,))
     register("q_knn_ivfpq", llm.knn_ivfpq, llm.KNN_IVFPQ_SQL)
     # curation-audit enrichments (4): split-leakage (pair-tier rider),
     # quality-aware survivors (clusters + #45 composition), benchmark
     # vocabulary coverage, cross-lingual embedding near-dups
-    register("q_split_leakage", llm.split_leakage, llm.SPLIT_LEAKAGE_SQL)
+    register("q_split_leakage", llm.split_leakage, llm.SPLIT_LEAKAGE_SQL, tiers=(pair,))
     register(
         "q_dedup_survivors_quality",
         llm.dedup_survivors_quality,
         llm.DEDUP_SURVIVORS_QUALITY_SQL,
+        tiers=(cc, gate),
     )
     register(
         "q_benchmark_vocab_coverage",
@@ -199,7 +214,7 @@ def _populate() -> None:
         llm.crosslingual_dups,
         llm.CROSSLINGUAL_DUPS_SQL,
     )
-    register("q_split_repair", llm.split_repair, llm.SPLIT_REPAIR_SQL)
+    register("q_split_repair", llm.split_repair, llm.SPLIT_REPAIR_SQL, tiers=(cc,))
 
     # ---- round-10 registrations (3 new, per VERDICT r9 ask #3: each
     # reuses an existing tier so marginal cost is small — semantic
@@ -212,11 +227,12 @@ def _populate() -> None:
         llm.decontaminate_semantic,
         llm.DECONTAMINATE_SEMANTIC_SQL,
     )
-    register("q_bpe_merges", llm.bpe_merges, llm.BPE_MERGES_SQL)
+    register("q_bpe_merges", llm.bpe_merges, llm.BPE_MERGES_SQL, tiers=(bpe,))
     register(
         "q_rerank_inference",
         llm.rerank_inference,
         llm.RERANK_INFERENCE_SQL,
+        tiers=(bm25, dense),
     )
 
     # ---- round-9 registrations (10 new: retrieval-quality diagnostics
@@ -227,7 +243,7 @@ def _populate() -> None:
     # backlog). They lead the window as never-driver-checked; the
     # remaining 40 slots rotate the 26 r4-stale greens + oldest r5
     # greens via _reorder_for_window. ----
-    register("q_rbo_overlap", llm.rbo_overlap, llm.RBO_OVERLAP_SQL)
+    register("q_rbo_overlap", llm.rbo_overlap, llm.RBO_OVERLAP_SQL, tiers=(bm25, dense))
     register(
         "q_embedding_dim_stats",
         llm.embedding_dim_stats,
@@ -252,7 +268,7 @@ def _populate() -> None:
     # lead the window as never-driver-checked; the remaining 40 slots
     # rotate the r2/r3 LLM block + oldest r4 greens via
     # _reorder_for_window. ----
-    register("q_hybrid_rrf", llm.hybrid_rrf, llm.HYBRID_RRF_SQL)
+    register("q_hybrid_rrf", llm.hybrid_rrf, llm.HYBRID_RRF_SQL, tiers=(bm25, dense))
     register("q_hard_negatives", llm.hard_negatives, llm.HARD_NEGATIVES_SQL)
     register("q_token_fertility", llm.token_fertility, llm.TOKEN_FERTILITY_SQL)
     register("q_lang_confusion", llm.lang_confusion, llm.LANG_CONFUSION_SQL)
@@ -260,14 +276,16 @@ def _populate() -> None:
         "q_dedup_threshold_sweep",
         llm.dedup_threshold_sweep,
         llm.DEDUP_THRESHOLD_SWEEP_SQL,
+        tiers=(pair,),
     )
-    register("q_mmr_rerank", llm.mmr_rerank, llm.MMR_RERANK_SQL)
+    register("q_mmr_rerank", llm.mmr_rerank, llm.MMR_RERANK_SQL, tiers=(dense,))
     register(
         "q_retrieval_overlap",
         llm.retrieval_overlap,
         llm.RETRIEVAL_OVERLAP_SQL,
+        tiers=(bm25, dense),
     )
-    register("q_ann_recall", llm.ann_recall, llm.ANN_RECALL_SQL)
+    register("q_ann_recall", llm.ann_recall, llm.ANN_RECALL_SQL, tiers=(dense, lsh, ivf))
     register("q_mixture_epochs", cur.mixture_epochs, cur.MIXTURE_EPOCHS_SQL)
     register(
         "q_packing_efficiency",
@@ -305,7 +323,7 @@ def _populate() -> None:
         os_.SEGMENT_MIGRATION_SQL,
     )
     register("q_lorenz_curve", os_.lorenz_curve, os_.LORENZ_CURVE_SQL)
-    register("q_ngram_novelty", llm.ngram_novelty, llm.NGRAM_NOVELTY_SQL)
+    register("q_ngram_novelty", llm.ngram_novelty, llm.NGRAM_NOVELTY_SQL, tiers=(shingle,))
     register(
         "q_lexical_diversity",
         llm.lexical_diversity,
@@ -346,6 +364,7 @@ def _populate() -> None:
         "q_dedup_containment",
         llm.dedup_containment,
         llm.DEDUP_CONTAINMENT_SQL,
+        tiers=(shingle,),
     )
     register("q_user_burst_rate", ea.user_burst_rate, ea.USER_BURST_RATE_SQL)
     register(
@@ -379,11 +398,7 @@ def _populate() -> None:
         comp.engagement_revenue_corr,
         comp.ENGAGEMENT_REVENUE_CORR_SQL,
     )
-    register(
-        "q_adamic_adar_links",
-        llm.adamic_adar_links,
-        llm.ADAMIC_ADAR_SQL,
-    )
+    register("q_adamic_adar_links", llm.adamic_adar_links, llm.ADAMIC_ADAR_SQL, tiers=(pair,))
     register(
         "q_forecast_baselines",
         os_.forecast_baselines,
@@ -418,6 +433,7 @@ def _populate() -> None:
         "q_knn_label_purity",
         llm.knn_label_purity,
         llm.KNN_LABEL_PURITY_SQL,
+        tiers=(dense,),
     )
     register(
         "q_type_hour_mutual_info",
@@ -428,6 +444,7 @@ def _populate() -> None:
         "q_local_clustering",
         llm.local_clustering_dupgraph,
         llm.LOCAL_CLUSTERING_SQL,
+        tiers=(pair,),
     )
     register("q_weekend_effect", ea.weekend_effect, ea.WEEKEND_EFFECT_SQL)
     register(
@@ -465,6 +482,7 @@ def _populate() -> None:
         "q_dup_rate_by_source",
         llm.dup_rate_by_source,
         llm.DUP_RATE_BY_SOURCE_SQL,
+        tiers=(pair,),
     )
 
     # ---- 51-67: r2/r3-dated LLM remainder (oldest greens — the
@@ -473,13 +491,13 @@ def _populate() -> None:
         "q_dedup_minhash_lsh",
         llm.dedup_minhash_lsh,
         llm.DEDUP_MINHASH_LSH_SQL,
-        headline=True,
+        tiers=(shingle,),
     )
     register("q_dedup_simhash", llm.dedup_simhash, llm.DEDUP_SIMHASH_SQL)
     register("q_dedup_embedding", llm.dedup_embedding, llm.DEDUP_EMBEDDING_SQL)
-    register("q_knn_bruteforce", llm.knn_bruteforce, llm.KNN_BRUTEFORCE_SQL, headline=True)
-    register("q_knn_lsh", llm.knn_lsh, llm.KNN_LSH_SQL)
-    register("q_knn_ivf", llm.knn_ivf, llm.KNN_IVF_SQL, headline=True)
+    register("q_knn_bruteforce", llm.knn_bruteforce, llm.KNN_BRUTEFORCE_SQL, tiers=(dense,))
+    register("q_knn_lsh", llm.knn_lsh, llm.KNN_LSH_SQL, tiers=(lsh,))
+    register("q_knn_ivf", llm.knn_ivf, llm.KNN_IVF_SQL, tiers=(ivf,))
     register("q_embed_quantize", llm.embed_quantize, llm.EMBED_QUANTIZE_SQL)
     register("q_knn_quantized", llm.knn_quantized, llm.KNN_QUANTIZED_SQL)
     register("q_semantic_dedup", llm.semantic_dedup, llm.SEMANTIC_DEDUP_SQL)
@@ -489,35 +507,38 @@ def _populate() -> None:
     register("q_corpus_stats", llm.corpus_stats, llm.CORPUS_STATS_SQL)
     register("q_vocab_topk", llm.vocab_topk, llm.VOCAB_TOPK_SQL)
     register("q_lang_id", llm.lang_id, llm.LANG_ID_SQL)
-    register("q_quality_score", llm.quality_score, llm.QUALITY_SCORE_SQL, headline=True)
+    register("q_quality_score", llm.quality_score, llm.QUALITY_SCORE_SQL, tiers=(gate,))
     register("q_event_profile_sketch", ea.event_profile_sketch, None)
 
     # ---- Tier F: driver-green r4 ----
-    register("q_dedup_clusters_star", llm.dedup_clusters_star, llm.DEDUP_CLUSTERS_STAR_SQL)
+    register(
+        "q_dedup_clusters_star",
+        llm.dedup_clusters_star,
+        llm.DEDUP_CLUSTERS_STAR_SQL,
+        tiers=(pair,),
+    )
     register("q_pii_scrub", cur.pii_scrub, cur.PII_SCRUB_SQL)
-    register("q_gopher_quality", cur.gopher_quality, cur.GOPHER_QUALITY_SQL, headline=True)
+    register("q_gopher_quality", cur.gopher_quality, cur.GOPHER_QUALITY_SQL, tiers=(gate,))
     register("q_pack_sequences", cur.pack_sequences, cur.PACK_SEQUENCES_SQL)
-    register("q_decontaminate", cur.decontaminate, cur.DECONTAMINATE_SQL, headline=True)
+    register("q_decontaminate", cur.decontaminate, cur.DECONTAMINATE_SQL, tiers=(shingle,))
     register("q_domain_mix", cur.domain_mix, cur.DOMAIN_MIX_SQL)
     register("q_dedup_incremental", cur.dedup_incremental, cur.DEDUP_INCREMENTAL_SQL)
     register(
         "q_curation_pipeline",
         cur.curation_pipeline,
         cur.CURATION_PIPELINE_SQL,
-        headline=True,
+        tiers=(gate,),
     )
     register(
         "q_boilerplate_strip",
         cur.boilerplate_strip,
         cur.BOILERPLATE_STRIP_SQL,
-        headline=True,
     )
     register("q_tfidf_topk", llm.tfidf_topk, llm.TFIDF_TOPK_SQL)
     register(
         "q_retention_cohorts",
         ea.retention_cohorts,
         ea.RETENTION_COHORTS_SQL,
-        headline=True,
     )
     register("q_sales_cube", os_.sales_cube, os_.SALES_CUBE_SQL)
     register("q_status_pivot", os_.status_pivot, os_.STATUS_PIVOT_SQL)
@@ -537,7 +558,6 @@ def _populate() -> None:
         "q_returned_item_revenue",
         tpch.returned_item_revenue,
         tpch.RETURNED_ITEM_REVENUE_SQL,
-        headline=True,
     )
     register(
         "q_profit_by_nation", tpch.profit_by_nation, tpch.PROFIT_BY_NATION_SQL
@@ -556,7 +576,6 @@ def _populate() -> None:
         "q_last_touch_attribution",
         ea.last_touch_attribution,
         ea.LAST_TOUCH_ATTRIBUTION_SQL,
-        headline=True,
     )
     register(
         "q_session_conversion",
@@ -587,6 +606,7 @@ def _populate() -> None:
         "q_pagerank_dupgraph",
         llm.pagerank_dupgraph,
         llm.PAGERANK_DUPGRAPH_SQL,
+        tiers=(pair,),
     )
     register(
         "q_value_percentiles", ea.value_percentiles, ea.VALUE_PERCENTILES_SQL
@@ -595,11 +615,13 @@ def _populate() -> None:
         "q_dedup_cluster_stats",
         llm.dedup_cluster_stats,
         llm.DEDUP_CLUSTER_STATS_SQL,
+        tiers=(pair, cc),
     )
     register(
         "q_decontaminate_neardup",
         cur.decontaminate_neardup,
         cur.DECONTAMINATE_NEARDUP_SQL,
+        tiers=(shingle,),
     )
     register(
         "q_event_transitions", ea.event_transitions, ea.EVENT_TRANSITIONS_SQL
@@ -611,10 +633,9 @@ def _populate() -> None:
         "q_min_cost_supplier",
         tpch.min_cost_supplier,
         tpch.MIN_COST_SUPPLIER_SQL,
-        headline=True,
     )
     register("q_important_stock", tpch.important_stock, tpch.IMPORTANT_STOCK_SQL)
-    register("q_basket_pairs", os_.basket_pairs, os_.BASKET_PAIRS_SQL, headline=True)
+    register("q_basket_pairs", os_.basket_pairs, os_.BASKET_PAIRS_SQL)
     register("q_rfm_segments", os_.rfm_segments, os_.RFM_SEGMENTS_SQL)
     register(
         "q_shipping_delay_percentiles",
@@ -622,14 +643,14 @@ def _populate() -> None:
         os_.SHIPPING_DELAY_PCTS_SQL,
     )
     register("q_fuzzy_part_match", os_.fuzzy_part_match, os_.FUZZY_PART_MATCH_SQL)
-    register("q_mad_outliers", ea.mad_outliers, ea.MAD_OUTLIERS_SQL, headline=True)
+    register("q_mad_outliers", ea.mad_outliers, ea.MAD_OUTLIERS_SQL)
     register("q_max_concurrency", ea.max_concurrency, ea.MAX_CONCURRENCY_SQL)
     register("q_hourly_seasonality", ea.hourly_seasonality, ea.HOURLY_SEASONALITY_SQL)
     register("q_event_cooccurrence", ea.event_cooccurrence, ea.EVENT_COOCCURRENCE_SQL)
     register("q_activity_streaks", ea.activity_streaks, ea.ACTIVITY_STREAKS_SQL)
     register("q_bigram_logprob", llm.bigram_logprob, llm.BIGRAM_LOGPROB_SQL)
-    register("q_bm25_search", llm.bm25_search, llm.BM25_SEARCH_SQL, headline=True)
-    register("q_triangle_census", llm.triangle_census, llm.TRIANGLE_CENSUS_SQL)
+    register("q_bm25_search", llm.bm25_search, llm.BM25_SEARCH_SQL, tiers=(bm25,))
+    register("q_triangle_census", llm.triangle_census, llm.TRIANGLE_CENSUS_SQL, tiers=(pair,))
     register(
         "q_customer_churn_segments",
         os_.customer_churn_segments,
@@ -646,7 +667,6 @@ def _populate() -> None:
         "q_cumulate_window",
         ea.cumulate_window_daily,
         ea.CUMULATE_WINDOW_SQL,
-        headline=True,
     )
     register("q_chi2_independence", ea.chi2_independence, ea.CHI2_INDEPENDENCE_SQL)
     register("q_ks_drift", llm.ks_drift, llm.KS_DRIFT_SQL)
@@ -654,13 +674,12 @@ def _populate() -> None:
         "q_duplicated_spans",
         llm.duplicated_spans,
         llm.DUPLICATED_SPANS_SQL,
-        headline=True,
     )
     register("q_revenue_gini", os_.revenue_gini, os_.REVENUE_GINI_SQL)
     register("q_benford_digits", os_.benford_digits, os_.BENFORD_DIGITS_SQL)
     register("q_autocorr_daily", os_.autocorr_daily, os_.AUTOCORR_DAILY_SQL)
     register("q_weighted_sample", llm.weighted_sample, llm.WEIGHTED_SAMPLE_SQL)
-    register("q_dupgraph_degrees", llm.dupgraph_degrees, llm.DUPGRAPH_DEGREES_SQL)
+    register("q_dupgraph_degrees", llm.dupgraph_degrees, llm.DUPGRAPH_DEGREES_SQL, tiers=(pair,))
     register("q_ohlc_bars", ea.ohlc_bars, ea.OHLC_BARS_SQL)
     register("q_time_weighted_avg", ea.time_weighted_avg, ea.TIME_WEIGHTED_AVG_SQL)
     register("q_fk_integrity", os_.fk_integrity, os_.FK_INTEGRITY_SQL)
@@ -668,7 +687,7 @@ def _populate() -> None:
     register("q_doc_fingerprint", llm.doc_fingerprint, llm.DOC_FINGERPRINT_SQL)
     register("q_doc_chunking", llm.doc_chunking, llm.DOC_CHUNKING_SQL)
     register("q_train_val_split", llm.train_val_split, llm.TRAIN_VAL_SPLIT_SQL)
-    register("q_dedup_survivors", llm.dedup_survivors, llm.DEDUP_SURVIVORS_SQL)
+    register("q_dedup_survivors", llm.dedup_survivors, llm.DEDUP_SURVIVORS_SQL, tiers=(pair,))
     register("q_sales_rollup", os_.sales_rollup, os_.SALES_ROLLUP_SQL)
     register("q_event_profile", ea.event_profile, ea.EVENT_PROFILE_SQL)
     register("q_order_stats_daily", os_.order_stats_daily, os_.ORDER_STATS_DAILY_SQL)
@@ -676,10 +695,10 @@ def _populate() -> None:
     register("q_item_sales_stats", os_.item_sales_stats, os_.ITEM_SALES_STATS_SQL)
     register("q_status_distribution", os_.status_distribution, os_.STATUS_DISTRIBUTION_SQL)
     register("q_top_parts_per_segment", os_.top_parts_per_segment, os_.TOP_PARTS_PER_SEGMENT_SQL)
-    register("q_dedup_clusters", llm.dedup_clusters, llm.DEDUP_CLUSTERS_SQL)
+    register("q_dedup_clusters", llm.dedup_clusters, llm.DEDUP_CLUSTERS_SQL, tiers=(cc,))
     register("q_stratified_sample", llm.stratified_sample, llm.STRATIFIED_SAMPLE_SQL)
     register(
-        "q_event_funnel", ea.event_funnel, ea.EVENT_FUNNEL_SQL, headline=True
+        "q_event_funnel", ea.event_funnel, ea.EVENT_FUNNEL_SQL
     )
     register(
         "q_funnel_abandonment", ea.funnel_abandonment, ea.FUNNEL_ABANDONMENT_SQL
@@ -702,14 +721,13 @@ def _populate() -> None:
     # r5 trio (green r6)
     register("q_forecast_revenue", tpch.forecast_revenue, tpch.FORECAST_REVENUE_SQL)
     register("q_promo_suppliers", tpch.promo_suppliers, tpch.PROMO_SUPPLIERS_SQL)
-    register("q_lpa_communities", llm.lpa_communities, llm.LPA_COMMUNITIES_SQL)
+    register("q_lpa_communities", llm.lpa_communities, llm.LPA_COMMUNITIES_SQL, tiers=(pair,))
 
     # Tier N: registered r6, green r6
     register(
         "q_weighted_percentiles",
         os_.weighted_percentiles,
         os_.WEIGHTED_PERCENTILES_SQL,
-        headline=True,
     )
     register("q_skyline_parts", os_.skyline_parts, os_.SKYLINE_PARTS_SQL)
     register(
@@ -718,15 +736,16 @@ def _populate() -> None:
         os_.DUPLICATE_PAYMENTS_SQL,
     )
     register("q_kaplan_meier", os_.kaplan_meier, os_.KAPLAN_MEIER_SQL)
-    register("q_cohort_ltv", os_.cohort_ltv, os_.COHORT_LTV_SQL, headline=True)
+    register("q_cohort_ltv", os_.cohort_ltv, os_.COHORT_LTV_SQL)
     register("q_mann_kendall", ea.mann_kendall, ea.MANN_KENDALL_SQL)
     register("q_interevent_gaps", ea.interevent_gaps, ea.INTEREVENT_GAPS_SQL)
-    register("q_roc_auc", ea.roc_auc, ea.ROC_AUC_SQL, headline=True)
-    register("q_kcore_dupgraph", llm.kcore_dupgraph, llm.KCORE_DUPGRAPH_SQL)
+    register("q_roc_auc", ea.roc_auc, ea.ROC_AUC_SQL)
+    register("q_kcore_dupgraph", llm.kcore_dupgraph, llm.KCORE_DUPGRAPH_SQL, tiers=(pair,))
     register(
         "q_dupgraph_assortativity",
         llm.dupgraph_assortativity,
         llm.DUPGRAPH_ASSORTATIVITY_SQL,
+        tiers=(pair,),
     )
     register("q_flesch_reading", llm.flesch_reading, llm.FLESCH_READING_SQL)
     register("q_normalized_dedup", llm.normalized_dedup, llm.NORMALIZED_DEDUP_SQL)
@@ -742,32 +761,27 @@ def _populate() -> None:
         "q_sql_pricing_summary",
         tpch.pricing_summary,
         tpch.PRICING_SUMMARY_SQL,
-        headline=True,
     )
     register(
         "q_shipping_priority",
         tpch.shipping_priority,
         tpch.SHIPPING_PRIORITY_SQL,
-        headline=True,
     )
     register(
         "q_local_supplier_volume",
         tpch.local_supplier_volume,
         tpch.LOCAL_SUPPLIER_VOLUME_SQL,
-        headline=True,
     )
-    register("q_market_share", tpch.market_share, tpch.MARKET_SHARE_SQL, headline=True)
+    register("q_market_share", tpch.market_share, tpch.MARKET_SHARE_SQL)
     register(
         "q_order_priority_check",
         tpch.order_priority_check,
         tpch.ORDER_PRIORITY_CHECK_SQL,
-        headline=True,
     )
     register(
         "q_customer_order_distribution",
         tpch.customer_order_distribution,
         tpch.CUSTOMER_ORDER_DISTRIBUTION_SQL,
-        headline=True,
     )
     register(
         "q_large_volume_orders",
@@ -809,24 +823,29 @@ def _populate() -> None:
     register("q_keyby_agg", ea.keyby_agg, ea.KEYBY_AGG_SQL)
     register("q_validate_clean", ea.validate_clean, ea.VALIDATE_CLEAN_SQL)
     register("q_side_output_errors", ea.side_output_errors, ea.SIDE_OUTPUT_ERRORS_SQL)
-    register("q_json_etl", ea.json_etl, ea.JSON_ETL_SQL, headline=True)
+    register("q_json_etl", ea.json_etl, ea.JSON_ETL_SQL)
 
     # windows (#10-14)
-    register("q_tumbling_window", ea.tumbling_window, ea.TUMBLING_WINDOW_SQL, headline=True)
-    register("q_sliding_window", ea.sliding_window, ea.SLIDING_WINDOW_SQL, headline=True)
-    register("q_session_window", ea.session_window, ea.SESSION_WINDOW_SQL, headline=True)
+    register("q_tumbling_window", ea.tumbling_window, ea.TUMBLING_WINDOW_SQL)
+    register("q_sliding_window", ea.sliding_window, ea.SLIDING_WINDOW_SQL)
+    register("q_session_window", ea.session_window, ea.SESSION_WINDOW_SQL)
     register("q_count_window_tumbling", ea.count_window_tumbling, ea.COUNT_WINDOW_TUMBLING_SQL)
     register("q_count_window_sliding", ea.count_window_sliding, ea.COUNT_WINDOW_SLIDING_SQL)
 
     # joins (#16-19)
-    register("q_lookup_join", os_.lookup_join, os_.LOOKUP_JOIN_SQL, headline=True)
+    register("q_lookup_join", os_.lookup_join, os_.LOOKUP_JOIN_SQL)
     register("q_window_join", ea.window_join, ea.WINDOW_JOIN_SQL)
-    register("q_interval_join", ea.interval_join, ea.INTERVAL_JOIN_SQL, headline=True)
-    register("q_asof_join", ea.asof_join, ea.ASOF_JOIN_SQL, headline=True)
+    register("q_interval_join", ea.interval_join, ea.INTERVAL_JOIN_SQL)
+    register("q_asof_join", ea.asof_join, ea.ASOF_JOIN_SQL)
 
     # first dedup block (#37-38b) — fills the window to exactly 50
-    register("q_dedup_exact", llm.dedup_exact, llm.DEDUP_EXACT_SQL, headline=True)
-    register("q_dedup_ngram_jaccard", llm.dedup_ngram_jaccard, llm.DEDUP_NGRAM_JACCARD_SQL)
+    register("q_dedup_exact", llm.dedup_exact, llm.DEDUP_EXACT_SQL)
+    register(
+        "q_dedup_ngram_jaccard",
+        llm.dedup_ngram_jaccard,
+        llm.DEDUP_NGRAM_JACCARD_SQL,
+        tiers=(pair,),
+    )
     register("q_dedup_snm", llm.dedup_snm, llm.DEDUP_SNM_SQL)
 
     _reorder_for_window()

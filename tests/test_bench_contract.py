@@ -55,118 +55,6 @@ def test_bench_main_prints_compact_line_only(monkeypatch):
     assert '"samples"' not in src.split("print(json.dumps(out))")[1]
 
 
-def _direct_callers(module, builder: str) -> set[str]:
-    """Module-level functions whose body contains a DIRECT call to
-    ``builder``.  AST-based (advice r10): the earlier regex body scan
-    matched builder tokens inside docstrings, so a consumer could pass
-    the pin by MENTIONING the tier it consumes transitively — and a
-    harmless docstring rewording would then break the derived set."""
-    import ast
-    import inspect
-
-    tree = ast.parse(inspect.getsource(module))
-    out = set()
-    for node in tree.body:
-        if not isinstance(node, ast.FunctionDef) or node.name == builder:
-            continue
-        for sub in ast.walk(node):
-            if (isinstance(sub, ast.Call)
-                    and isinstance(sub.func, ast.Name)
-                    and sub.func.id == builder):
-                out.add(node.name)
-                break
-    return out
-
-
-# Consumers that reach a tier THROUGH another plan function (a direct
-# plan-fn call), which the direct-call scan cannot see.  Explicit, not
-# docstring-derived (advice r10): knn_label_purity calls
-# knn_bruteforce; rerank_inference calls hybrid_rrf (which consumes
-# both retrieval tiers).
-_TRANSITIVE_TIER_CONSUMERS = {
-    "_shared_bm25_tier": {"rerank_inference"},
-    "_shared_dense_topk": {"knn_label_purity", "rerank_inference"},
-    # dedup_survivors_quality and split_repair call dedup_clusters (a
-    # direct plan-fn call), which consumes the CC-label tier; the three
-    # round-12 curation audits (plans/curation.py) do the same from
-    # ANOTHER module, which the single-module AST scan cannot see
-    "_shared_cluster_tier": {
-        "dedup_survivors_quality",
-        "split_repair",
-        "curation_pipeline_v2",
-        "repaired_split_balance",
-        "curation_funnel",
-    },
-    # decontaminate, decontaminate_neardup and curation_funnel
-    # (plans/curation.py) call _shared_shingle_tier directly from
-    # ANOTHER module
-    "_shared_shingle_tier": {
-        "decontaminate",
-        "decontaminate_neardup",
-        "curation_funnel",
-    },
-    # five plans/curation.py queries consume the gate-features tier
-    # cross-module (quality_score is the one direct llm_pipeline caller)
-    "_shared_gate_tier": {
-        "gopher_quality",
-        "curation_pipeline",
-        "curation_pipeline_v2",
-        "repaired_split_balance",
-        "curation_funnel",
-    },
-}
-
-
-def test_pair_tier_consumers_matches_source_and_registry_order():
-    """pair_tier_consumers() feeds BENCH_EVIDENCE (cost attribution)
-    and the extra-sample re-warm path; round 6 registered three new
-    consumers without updating the then-static tuple.  Derive the true
-    consumer set from the plan source (functions whose body directly
-    calls the tier builder, plus the explicit transitive table above),
-    pin the static _*_TIER_CONSUMER_FNS to exactly that set, and check
-    the name tuple follows registry order (which self-rotates per
-    round since r8)."""
-    from flink_learning_practise_spark.plans import llm_pipeline as llm
-
-    order = list(all_queries().items())
-    for builder, static, getter in (
-        ("_shared_shingle_tier", llm._SHINGLE_TIER_CONSUMER_FNS,
-         llm.shingle_tier_consumers),
-        ("_shared_pair_tier", llm._PAIR_TIER_CONSUMER_FNS,
-         llm.pair_tier_consumers),
-        ("_shared_cluster_tier", llm._CLUSTER_TIER_CONSUMER_FNS,
-         llm.cluster_tier_consumers),
-        ("_shared_bm25_tier", llm._BM25_TIER_CONSUMER_FNS,
-         llm.bm25_tier_consumers),
-        ("_shared_dense_topk", llm._DENSE_TIER_CONSUMER_FNS,
-         llm.dense_tier_consumers),
-        ("_shared_lsh_topk", llm._LSH_TIER_CONSUMER_FNS,
-         llm.lsh_tier_consumers),
-        ("_shared_ivf_topk", llm._IVF_TIER_CONSUMER_FNS,
-         llm.ivf_tier_consumers),
-        ("_shared_bpe_merges", llm._BPE_TIER_CONSUMER_FNS,
-         llm.bpe_tier_consumers),
-        ("_shared_gate_tier", llm._GATE_TIER_CONSUMER_FNS,
-         llm.gate_tier_consumers),
-    ):
-        callers = _direct_callers(llm, builder)
-        callers |= _TRANSITIVE_TIER_CONSUMERS.get(builder, set())
-        assert static == callers, (
-            f"{builder} consumer set drifted: expected {sorted(callers)}"
-        )
-        want = tuple(
-            name for name, q in order if q.fn.__name__ in callers
-        )
-        assert getter() == want, (
-            f"{getter.__name__}() drifted: expected {want}"
-        )
-    assert set(llm.shared_tiers()) == {
-        "doc_shingle_tier", "ppjoin_pair_tier", "cc_labels_tier",
-        "bm25_topn_tier", "dense_topk_tier", "lsh_topk_tier",
-        "ivf_topk_tier", "bpe_merges_tier", "gate_features_tier",
-    }
-
-
 def test_dense_tier_depth_covers_every_consumer_k():
     """The shared dense tier is exact only because every consumer's
     rank cut is <= the tier depth (prefix property of a total order).

@@ -7,9 +7,9 @@
    broad except, so a Spark upgrade could silently fall back to the
    ~80 ms ``.rdd`` probe per call without any test noticing.
 
-2. The shared shingle staging tier: consumers read the SAME checkpointed
-   (doc_id, _sh, _n) frame, and the ``*_from_shingles`` operator
-   variants are row-identical to their raw re-shingling forms.
+2. The ``*_from_shingles`` operator variants are row-identical to their
+   raw re-shingling forms (the shingle tier itself is pinned in
+   tests/test_tiers.py).
 """
 
 from __future__ import annotations
@@ -73,23 +73,7 @@ def test_widen_memo_semantic_hash_probe_engages(spark, sf_small, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# shared shingle staging tier (round-13 top optimization)
-
-
-def test_shingle_tier_is_checkpointed_and_memoized(spark, sf_small):
-    from flink_learning_practise_spark.plans import llm_pipeline as llm
-
-    llm.reset_shared_caches()
-    t1 = llm._shared_shingle_tier(spark, sf_small)
-    t2 = llm._shared_shingle_tier(spark, sf_small)
-    assert t2 is t1, "shingle tier rebuilt on second call"
-    assert set(t1.columns) == {"doc_id", "_sh", "_n"}
-    # checkpointed: consumers see a materialized scan, not the
-    # interpreted shingling chain
-    analyzed = t1._jdf.queryExecution().analyzed().toString()
-    assert "LogicalRDD" in analyzed or "ExistingRDD" in analyzed
-    llm.reset_shared_caches()
-    assert not llm._SHINGLE_TIER_MEMO, "reset_shared_caches missed the tier"
+# *_from_shingles entry points over the shared shingle tier's frame
 
 
 def test_from_shingles_variants_match_raw_forms(spark, sf_small):
@@ -121,29 +105,3 @@ def test_from_shingles_variants_match_raw_forms(spark, sf_small):
     raw = curation.decontaminate(docs, "doc_id", "text", pred, k=3)
     via = curation.decontaminate_from_shingles(sh, "doc_id", pred)
     assert sorted(map(tuple, raw.collect())) == sorted(map(tuple, via.collect()))
-
-
-def test_gate_tier_matches_inline_feature_chain(spark, sf_small):
-    """The gate-features tier must hold EXACTLY the rows of the inline
-    repetition_features(carry=text) → quality_features chain it
-    replaced in six queries, and must be checkpointed + memoized like
-    the other tiers."""
-    from flink_learning_practise_spark.operators import text
-    from flink_learning_practise_spark.plans import llm_pipeline as llm
-
-    llm.reset_shared_caches()
-    tier = llm._shared_gate_tier(spark, sf_small)
-    assert llm._shared_gate_tier(spark, sf_small) is tier
-    analyzed = tier._jdf.queryExecution().analyzed().toString()
-    assert "LogicalRDD" in analyzed or "ExistingRDD" in analyzed
-    docs = datasets.load(spark, sf_small, "documents")
-    inline = text.quality_features(
-        curation.repetition_features(docs, "doc_id", "text", carry=("text",)),
-        "text",
-    )
-    assert tier.columns == inline.columns
-    assert sorted(map(tuple, tier.collect())) == sorted(
-        map(tuple, inline.collect())
-    )
-    llm.reset_shared_caches()
-    assert not llm._GATE_TIER_MEMO

@@ -107,7 +107,7 @@ def main() -> None:
     print("of whole-stage-codegen spans. Regenerate after plan-affecting")
     print("changes and review the diff.")
     print()
-    print("Shared-tier consumers (see llm_pipeline.shared_tiers()) are")
+    print("Shared-tier consumers (see plans/tiers.py shared_tiers()) are")
     print("audited against a WARM memo: q_bm25_search's row is the 20-row")
     print("checkpoint scan (its build plan = the two token-scan aggregates,")
     print("7 shuffles, timed separately by bench.py), and pair-tier")
