@@ -10,7 +10,8 @@ it stays inside whole-stage codegen — the reference's ``map_func``/
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+import operator
+from collections.abc import Iterable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -149,6 +150,113 @@ def stratified_sample(
     return df.filter(bucket < threshold)
 
 
+# ---------------------------------------------------------------------------
+# The distributed rank / ntile / prefix-sum / skyline family. Every member
+# is one pattern: range-pin the relation on (key, order) so each key
+# occupies a run of consecutive, globally ordered partitions; compute the
+# per-partition part (row_number, running sum, running max) in parallel;
+# bring ONE aggregate per (partition, key) to the driver and prefix it
+# there; attach each partition's offset back as a literal. A
+# ``Window.partitionBy(key).orderBy(...)`` (or an unpartitioned
+# ``Window.orderBy``) would instead funnel a whole key (or the whole
+# relation) through one task.
+
+
+def _range_pin(
+    df: DataFrame,
+    key_cols: list[str],
+    order_cols: list[str],
+    partitions: int | None,
+    agg: Column | None = None,
+    zero=0,
+    step=operator.add,
+) -> tuple[DataFrame, list[tuple], dict]:
+    """Range-pin ``df`` on (key, order), sort within partitions, stamp
+    ``_pid`` and ``localCheckpoint`` it, so every later job reads the
+    SAME sampled range bounds. Then collect ``agg`` (the row count by
+    default) per (partition, key): at most P + K − 1 rows, since each
+    partition adds one row per key it touches and keys span partitions
+    contiguously — bounded by parallelism plus key cardinality, never by
+    data. NULL keys group together, as in ``Window.partitionBy``.
+
+    Returns ``(pinned, parts, totals)``. ``parts`` is
+    ``[(pid, key, before, value)]`` in partition order, where ``before``
+    folds (``step`` from ``zero``) the key's values in earlier
+    partitions; ``totals`` maps each key tuple to its full fold.
+
+    RETENTION: the checkpoint blocks back every frame built on
+    ``pinned``, so they live as long as the caller's result is
+    referenced; drop it when done (ContextCleaner then unpersists them).
+    """
+    p = partitions or df.sparkSession.sparkContext.defaultParallelism
+    cols = [*key_cols, *order_cols]
+    pinned = (
+        df.repartitionByRange(p, *[F.col(c) for c in cols])
+        .sortWithinPartitions(*cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint()
+    )
+    agg = F.count(F.lit(1)) if agg is None else agg
+    rows = pinned.groupBy("_pid", *key_cols).agg(agg.alias("_a")).collect()
+    totals: dict[tuple, object] = {}
+    parts = []
+    for r in sorted(rows, key=lambda r: r["_pid"]):
+        k = tuple(r[c] for c in key_cols)
+        before = totals.get(k, zero)
+        parts.append((r["_pid"], k, before, r["_a"]))
+        totals[k] = before if r["_a"] is None else step(before, r["_a"])
+    return pinned, parts, totals
+
+
+def _at_pid(
+    pinned: DataFrame,
+    key_cols: list[str],
+    entries: list[tuple],
+    dtype: str,
+) -> Column:
+    """Each row's value in ``entries`` (``[(pid, key, value, ...)]``,
+    e.g. :func:`_range_pin`'s parts), looked up by the row's (``_pid``,
+    key) and cast to ``dtype``.
+
+    One flat literal: an array indexed by ``_pid`` whose entry maps each
+    key present in that partition to its value. The map key is a struct
+    of the key columns, so a NULL key is a group of its own. A CASE
+    chain over ``_pid`` nests one level per partition and overflows the
+    column converter's stack near 300 partitions; a broadcast join on
+    the keys drops NULL keys and costs a join per call."""
+    if not entries:
+        return F.lit(None).cast(dtype)
+    types = dict(pinned.dtypes)
+    by_pid: list[list] = [[] for _ in range(max(e[0] for e in entries) + 1)]
+    for pid, k, v, *_ in entries:
+        by_pid[pid] += [
+            F.struct(*[F.lit(x).cast(types[c]).alias(c) for c, x in zip(key_cols, k)]),
+            F.lit(v).cast(dtype),
+        ]
+    # a partition with no entry holds no row: its NULL slot is never read
+    arr = F.array(*[F.create_map(*kv) if kv else F.lit(None) for kv in by_pid])
+    return F.element_at(arr, F.col("_pid") + 1)[F.struct(*key_cols)]
+
+
+def _rank_with_totals(
+    df: DataFrame,
+    key_cols: list[str],
+    order_cols: list[str],
+    rank_col: str,
+    partitions: int | None,
+) -> tuple[DataFrame, dict]:
+    """Per-key row_number over (key, order) plus the per-key row counts
+    (the driver prefix sums, so no extra job): local row_number within
+    (partition, key) + the key's count in earlier partitions."""
+    from pyspark.sql import Window
+
+    pinned, parts, totals = _range_pin(df, key_cols, order_cols, partitions)
+    off = _at_pid(pinned, key_cols, parts, "bigint")
+    w = Window.partitionBy("_pid", *key_cols).orderBy(*order_cols)
+    ranked = pinned.withColumn(rank_col, F.row_number().over(w) + off)
+    return ranked.drop("_pid"), totals
+
+
 def global_rank(
     df: DataFrame,
     order_cols: list[str],
@@ -158,28 +266,15 @@ def global_rank(
     """Global dense total-order row ranking WITHOUT a single-partition
     window (``Window.orderBy()`` with no partitionBy funnels the whole
     relation through one task — the classic global-sort scale trap this
-    module bans elsewhere).
+    module bans elsewhere): ``repartitionByRange`` on the order columns,
+    per-partition ``row_number``, plus the partition's offset (the count
+    of rows in earlier partitions, prefixed on the driver from ≤ P
+    scalars; see :func:`_range_pin`).
 
-    The distributed-rank pattern:
-    1. ``repartitionByRange`` on the order columns — globally ordered,
-       balanced partitions (sampled bounds);
-    2. per-PARTITION ``row_number`` (parallel — each partition sorts
-       its own slice, which sortWithinPartitions already did);
-    3. per-partition row counts → the driver (≤ P scalars), prefix-sum
-       offsets inlined back as a CASE literal: global rank =
-       partition offset + local rank.
-
-    The frame is pinned with ``localCheckpoint`` so the count pass and
-    the rank pass read the SAME sampled range bounds (the range
-    exchange would otherwise be free to resample between jobs).
     ``order_cols`` must be a TOTAL order (include a unique id) or the
-    rank is partition-placement-dependent on ties.
-
-    RETENTION: the checkpoint blocks live as long as the RETURNED frame
-    is referenced — they back its plan, so they cannot be released
-    eagerly here. Drop the frame when done (ContextCleaner then
-    unpersists the blocks); callers looping over many invocations
-    should not accumulate the results. (advice r3)
+    rank is partition-placement-dependent on ties. The returned frame
+    holds checkpoint blocks while referenced; callers looping over many
+    invocations should not accumulate the results.
     """
     return _global_rank_with_total(df, order_cols, rank_col, partitions)[0]
 
@@ -193,30 +288,8 @@ def _global_rank_with_total(
     """Rank frame plus the total row count — the count is the final
     prefix sum the rank pass already computed on the driver, so
     callers needing N (e.g. ntile) pay no extra job."""
-    from pyspark.sql import Window
-
-    p = partitions or df.sparkSession.sparkContext.defaultParallelism
-    pinned = (
-        df.repartitionByRange(p, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    counts = sorted(
-        (r["_pid"], r["n"])
-        for r in pinned.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    )
-    offset = F.lit(0)
-    acc = 0
-    for pid, n in counts:
-        offset = F.when(F.col("_pid") == pid, F.lit(acc)).otherwise(offset)
-        acc += n
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    ranked = (
-        pinned.withColumn(rank_col, F.row_number().over(w) + offset)
-        .drop("_pid")
-    )
-    return ranked, acc
+    ranked, totals = _rank_with_totals(df, [], order_cols, rank_col, partitions)
+    return ranked, totals.get((), 0)
 
 
 def global_ntile(
@@ -260,7 +333,6 @@ def global_ntile_multi(
     df: DataFrame,
     n_buckets: int,
     orderings: list[tuple[list[str], str]],
-    stack_cast: str | None = None,
     skip_nulls: bool = False,
 ) -> DataFrame:
     """Several ntile scores over DIFFERENT orderings of one frame,
@@ -270,73 +342,65 @@ def global_ntile_multi(
 
     ``orderings`` is ``[(order_cols, bucket_col), ...]``; each
     ``order_cols`` must be a STRICT total order (append a unique
-    tie-break key — SQL ``ntile``'s determinism needs that anyway)
-    over NON-NULL values: SQL ntile ranks NULLs first, but a NULL
-    landing in a boundary tuple makes the struct comparison in
-    :func:`_with_bucket_from_bounds` yield NULL (not counted) and
-    silently undercounts buckets. The non-stacked path raises if a
-    collected boundary contains a NULL; the stacked path's
-    ``skip_nulls`` is the supported NULL-measure contract.
+    tie-break key — SQL ``ntile``'s determinism needs that anyway).
 
-    Per measure: rank only the narrow ``order_cols`` projection
-    (2 columns move through the range exchange, not the full row),
-    keep the rows at ntile's B-1 cumulative cut ranks — the exact
-    bucket-boundary tuples — and ``collect()`` them (bounded:
-    ``n_buckets - 1`` rows, same driver-scalar class as the rank
-    pass's partition-count offsets). Bucket assignment on the full
-    frame is then a map-side expression counting boundaries strictly
-    below the row's tuple — exact ntile semantics (first N mod B
-    buckets one row larger) because in a total order the row at
-    global rank r has exactly ``#{cut ranks < r}`` boundaries below
-    it.  The scored frame itself never shuffles; at 100 TB the only
-    data movement is B-1-quantile selection over column-pruned
-    projections.
+    The narrow ``order_cols`` projections of all orderings stack into
+    ONE frame — ordering t's columns in slots of their own, NULL in the
+    other orderings' slots, so no value is cast and any column types
+    mix — and rank once per tag (:func:`_rank_with_totals` keyed on the
+    tag). The rows at each ordering's B-1 ntile cut ranks are the exact
+    bucket-boundary tuples; ``collect()`` keeps them (bounded:
+    #orderings × (B-1) rows, the same driver-scalar class as the rank
+    pass's offsets). Bucket assignment on the full frame is then a
+    map-side count of boundaries strictly below the row's tuple — exact
+    ntile semantics, because in a total order the row at rank r has
+    exactly ``#{cut ranks < r}`` boundaries below it. The scored frame
+    itself never shuffles: the only data movement is one range exchange
+    of column-pruned projections.
 
-    ``stack_cast`` (e.g. ``"double"``) collapses the per-measure rank
-    passes into ONE: every ordering must then be ``[measure, key]``
-    with the SAME key column, and casting each measure to
-    ``stack_cast`` must be ORDER-EXACT (caller-asserted — ints below
-    2^53 into double, say).  The measures stack into a single
-    (tag, value, key) projection, so boundary extraction for all
-    measures costs one range exchange + one checkpoint + two bounded
-    collects instead of 3x that — at local/bench scale the job-launch
-    overhead of the per-measure path dominates its runtime.
-
-    ``skip_nulls`` (stacked path only) excludes NULL measure values
-    from each measure's ranking and cuts — the "measure defined on a
-    subset" shape (e.g. per-half spend quartiles where a customer may
-    be absent from one half). Rows with a NULL measure get bucket 1
-    vacuously from the boundary count; callers must filter them out of
-    that measure's consumers.
+    NULL order values: SQL ntile ranks NULLs first, but the boundary
+    comparison has no NULL semantics. Without ``skip_nulls`` a NULL in
+    the first-ranked or a boundary tuple of an ordering raises
+    ``ValueError`` — for the ``[measure, unique non-null key]`` shape
+    that is any NULL measure. ``skip_nulls`` excludes rows with a NULL
+    order value from that ordering's ranking and cuts — the "measure
+    defined on a subset" shape (e.g. per-half spend quartiles where a
+    customer may be absent from one half). Rows with a NULL measure get
+    bucket 1 vacuously; callers must filter them out of that measure's
+    consumers.
 
     Callers should memoize ``df`` (``localCheckpoint``) — each
-    projection pass re-reads it.
+    projection re-reads it.
     """
-    if stack_cast is not None:
-        return _global_ntile_stacked(
-            df, n_buckets, orderings, stack_cast, skip_nulls
+    from functools import reduce
+
+    types = dict(df.dtypes)
+    slots = [
+        [(f"_o{t}_{j}", c) for j, c in enumerate(cols)]
+        for t, (cols, _) in enumerate(orderings)
+    ]
+    stacked = reduce(DataFrame.unionByName, [
+        (df.dropna(subset=cols) if skip_nulls else df).select(
+            F.lit(t).alias("_tag"),
+            *[(F.col(c) if u == t else F.lit(None).cast(types[c])).alias(s)
+              for u, ss in enumerate(slots) for s, c in ss],
         )
-    assert not skip_nulls, "skip_nulls is implemented for the stacked path"
+        for t, (cols, _) in enumerate(orderings)
+    ])
+    flat = [s for ss in slots for s, _ in ss]
+    ranked, totals = _rank_with_totals(stacked, ["_tag"], flat, "_gr", None)
+    cuts = [set(_ntile_cuts(totals.get((t,), 0), n_buckets)) for t in range(len(orderings))]
+    rows = ranked.where(F.col("_gr").isin(sorted({1}.union(*cuts)))).collect()
     out = df
-    for order_cols, bucket_col in orderings:
-        ranked, n_total = _global_rank_with_total(
-            df.select(*order_cols), order_cols, "_grank", None
-        )
-        cuts = _ntile_cuts(n_total, n_buckets)
-        bounds = sorted(
-            tuple(r[c] for c in order_cols)
-            for r in ranked.where(
-                F.col("_grank").isin([int(c) for c in cuts])
-            ).select(*order_cols).collect()
-        )
-        if any(v is None for b in bounds for v in b):
+    for t, (cols, bucket_col) in enumerate(orderings):
+        mine = [(r["_gr"], tuple(r[s] for s, _ in slots[t])) for r in rows if r["_tag"] == t]
+        if any(None in b for _, b in mine):
             raise ValueError(
-                f"global_ntile_multi: NULL in a {bucket_col} boundary "
-                f"tuple over {order_cols} — order columns must be "
-                "non-null (use the stacked path's skip_nulls for "
-                "NULL-measure semantics)"
+                f"global_ntile_multi: NULL in a {bucket_col} order tuple over "
+                f"{cols}; order columns must be non-null (or pass skip_nulls)"
             )
-        out = _with_bucket_from_bounds(out, order_cols, bucket_col, bounds)
+        bounds = [b for gr, b in mine if gr in cuts[t]]
+        out = _with_bucket_from_bounds(out, cols, bucket_col, bounds)
     return out
 
 
@@ -351,10 +415,12 @@ def _with_bucket_from_bounds(
     Flat expression tree (a chain of B-1 nested whens overflows the
     column-converter stack for large B): lexicographic struct
     comparison against an array literal of boundary structs, counted
-    with a JVM higher-order filter."""
+    with a JVM higher-order filter. Boundary values are cast to their
+    column's type, so the comparison is exact."""
+    types = dict(df.dtypes)
     row_s = F.struct(*[F.col(c) for c in order_cols])
     bound_arr = F.array(*[
-        F.struct(*[F.lit(v).alias(c) for c, v in zip(order_cols, b)])
+        F.struct(*[F.lit(v).cast(types[c]).alias(c) for c, v in zip(order_cols, b)])
         for b in bounds
     ])
     expr = F.lit(1) + (
@@ -362,102 +428,6 @@ def _with_bucket_from_bounds(
         if bounds else F.lit(0)
     )
     return df.withColumn(bucket_col, expr.cast("int"))
-
-
-def _global_ntile_stacked(
-    df: DataFrame,
-    n_buckets: int,
-    orderings: list[tuple[list[str], str]],
-    stack_cast: str,
-    skip_nulls: bool = False,
-) -> DataFrame:
-    """One-exchange boundary extraction for ALL measures: stack the
-    (measure, key) projections as (tag, value, key), range-exchange
-    once on (tag, value, key), then read every measure's B-1 ntile
-    boundaries out of the single pinned sort. Driver traffic is one
-    (pid, tag) count frame (#partitions x #measures rows) plus
-    #measures x (B-1) boundary tuples — the same bounded-scalar class
-    as :func:`_global_rank_with_total`'s prefix offsets."""
-    from pyspark.sql import Window
-
-    keys = {cols[1] for cols, _ in orderings}
-    assert len(keys) == 1 and all(len(c) == 2 for c, _ in orderings), (
-        "stack_cast requires orderings of ([measure, key], out) with "
-        "one shared key column"
-    )
-    key = keys.pop()
-    stacked = None
-    for tag, (cols, _) in enumerate(orderings):
-        src = df.where(F.col(cols[0]).isNotNull()) if skip_nulls else df
-        part = src.select(
-            F.lit(tag).alias("_tag"),
-            F.col(cols[0]).cast(stack_cast).alias("_v"),
-            F.col(key).alias("_k"),
-        )
-        stacked = part if stacked is None else stacked.unionByName(part)
-    p = df.sparkSession.sparkContext.defaultParallelism
-    pinned = (
-        stacked.repartitionByRange(p, "_tag", "_v", "_k")
-        .sortWithinPartitions("_tag", "_v", "_k")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    counts = {
-        (r["_pid"], r["_tag"]): r["n"]
-        for r in pinned.groupBy("_pid", "_tag")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    pids = sorted({pid for pid, _ in counts})
-    # Per-tag global rank = per-(pid, tag) local row_number + the
-    # per-tag prefix offset of earlier partitions. The offsets join in
-    # as a broadcast (pid, tag, off) frame — bounded at #partitions ×
-    # #measures rows — rather than a nested when-chain of that depth,
-    # which would overflow the column-converter stack at high
-    # parallelism (the keyed_prefix_sum pattern; ADVICE r7).
-    acc = {tag: 0 for tag in range(len(orderings))}
-    offsets = []
-    for pid in pids:
-        for tag in acc:
-            n = counts.get((pid, tag), 0)
-            if n:
-                offsets.append((pid, tag, acc[tag]))
-                acc[tag] += n
-    off = df.sparkSession.createDataFrame(
-        offsets, "_pid int, _tag int, _off long"
-    )
-    cut_sets = {
-        tag: _ntile_cuts(acc[tag], n_buckets) for tag in acc
-    }
-    is_cut = F.lit(False)
-    for tag, cuts in cut_sets.items():
-        if cuts:
-            is_cut = F.when(
-                F.col("_tag") == tag,
-                F.col("_gr").isin([int(c) for c in cuts]),
-            ).otherwise(is_cut)
-    w = Window.partitionBy("_pid", "_tag").orderBy("_v", "_k")
-    bound_rows = (
-        # bounded P×M-row frame, never data-proportional
-        pinned.join(F.broadcast(off), ["_pid", "_tag"])  # broadcast-policy-exempt
-        .withColumn("_gr", F.row_number().over(w) + F.col("_off"))
-        .where(is_cut)
-        .select("_tag", "_v", "_k")
-        .collect()
-    )
-    out = df
-    for tag, (cols, bucket_col) in enumerate(orderings):
-        bounds = sorted(
-            (r["_v"], r["_k"]) for r in bound_rows if r["_tag"] == tag
-        )
-        cast_cols = [f"__cast_{cols[0]}", key]
-        out = _with_bucket_from_bounds(
-            out.withColumn(cast_cols[0], F.col(cols[0]).cast(stack_cast)),
-            cast_cols,
-            bucket_col,
-            bounds,
-        ).drop(cast_cols[0])
-    return out
 
 
 def ewma(
@@ -555,32 +525,13 @@ def ewma(
     )
 
 
-def _pin_and_count(
-    df: DataFrame,
-    key_cols: list[str],
-    order_cols: list[str],
-    partitions: int | None,
-) -> tuple[DataFrame, list]:
-    """Shared preamble of the few-huge-keys rank family: range-pin the
-    relation on (key, order), sort within partitions, stamp partition
-    ids, eagerly-enough checkpoint (so every later job reads the SAME
-    sampled range bounds), and collect the bounded per-(partition, key)
-    counts in partition order (≤ P + K − 1 rows — each partition adds
-    one row per key it touches and keys span partitions contiguously).
-    One definition so the range-tie/empty-input edges can't drift
-    between the rank and the selection variants (review r5)."""
-    p = partitions or df.sparkSession.sparkContext.defaultParallelism
-    keys = [F.col(c) for c in key_cols]
-    pinned = (
-        df.repartitionByRange(p, *keys, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*key_cols, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
+def _totals_frame(df: DataFrame, key_cols: list[str], totals: dict, col: str) -> DataFrame:
+    """:func:`_range_pin`'s per-key totals as a (keys..., ``col``) frame."""
+    types = dict(df.dtypes)
+    return df.sparkSession.createDataFrame(
+        [(*k, v) for k, v in totals.items()],
+        ", ".join([f"{c} {types[c]}" for c in key_cols] + [col]),
     )
-    counts = pinned.groupBy("_pid", *key_cols).agg(
-        F.count(F.lit(1)).alias("_n")
-    ).collect()
-    return pinned, sorted(counts, key=lambda r: r["_pid"])
 
 
 def keyed_rank_with_totals(
@@ -596,55 +547,23 @@ def keyed_rank_with_totals(
     ``Window.partitionBy(key).orderBy(...)`` puts each key's ENTIRE
     series in one task — correct for many small keys (per-user series),
     a scale trap when a handful of keys each hold billions of rows
-    (per-event-type, per-priority, per-status). This operator extends
-    the :func:`global_rank` pattern to keys:
-
-    1. ``repartitionByRange`` on (key, order) — each key occupies a
-       RUN of consecutive partitions, each partition a bounded slice;
-    2. per-partition local ``row_number`` within (partition, key);
-    3. per-(partition, key) counts to the driver — at most
-       P + K - 1 rows (each partition adds one count per key it
-       touches, and a key spans partitions contiguously), so the
-       collect is bounded by parallelism + key cardinality, NOT data;
-    4. prefix-sum offsets per key across its partition run, joined
-       back as a broadcast frame (P+K rows — policy-exempt bounded).
+    (per-event-type, per-priority, per-status). This extends the
+    :func:`global_rank` pattern to keys: range-pin on (key, order) so
+    each key occupies a RUN of consecutive partitions, local
+    ``row_number`` within (partition, key), plus the key's count in
+    earlier partitions (:func:`_range_pin`: ≤ P + K − 1 driver rows).
 
     Returns (ranked frame with ``rank_col``, totals frame with one
     (key..., n) row per key — the final prefix sums, no extra job).
-    ``order_cols`` must totally order rows WITHIN a key.  For
-    many-small-keys use a plain keyed window instead; the driver
-    collect here is bounded by K.
+    ``order_cols`` must totally order rows WITHIN a key. NULL keys rank
+    as one group, as in ``Window.partitionBy``. For many-small-keys use
+    a plain keyed window instead; the driver collect here is bounded by
+    K.
     """
-    from pyspark.sql import Window
-
-    pinned, counts = _pin_and_count(df, key_cols, order_cols, partitions)
-    # prefix sums per key, in partition order (partitions are globally
-    # range-ordered, so a key's slices appear in rank order)
-    acc: dict[tuple, int] = {}
-    offsets = []
-    for r in counts:
-        k = tuple(r[c] for c in key_cols)
-        offsets.append((r["_pid"], *k, acc.get(k, 0)))
-        acc[k] = acc.get(k, 0) + r["_n"]
-    spark = df.sparkSession
-    off_schema = ", ".join(
-        ["_pid int"]
-        + [f"{c} {t}" for c, t in df.select(*key_cols).dtypes]
-        + ["_off long"]
+    ranked, totals = _rank_with_totals(
+        df, key_cols, order_cols, rank_col, partitions
     )
-    off = spark.createDataFrame(offsets, off_schema)
-    totals = spark.createDataFrame(
-        [(*k, n) for k, n in acc.items()],
-        ", ".join([f"{c} {t}" for c, t in df.select(*key_cols).dtypes] + ["n long"]),
-    )
-    w = Window.partitionBy("_pid", *key_cols).orderBy(*order_cols)
-    ranked = (
-        # bounded P+K-row frame, never data-proportional
-        pinned.join(F.broadcast(off), ["_pid", *key_cols])  # broadcast-policy-exempt
-        .withColumn(rank_col, F.row_number().over(w) + F.col("_off"))
-        .drop("_pid", "_off")
-    )
-    return ranked, totals
+    return ranked, _totals_frame(df, key_cols, totals, "n long")
 
 
 def keyed_select_rank(
@@ -676,43 +595,25 @@ def keyed_select_rank(
       the discrete median. ``target_fn`` may also return an ITERABLE
       of ranks (e.g. the p5 and p95 winsorizing bounds) — one selected
       row per distinct in-range rank, still windowing only the ≤ K·T
-      partitions that hold a target.
+      partitions that hold a target. NULL keys are one key.
     """
     from pyspark.sql import Window
 
-    pinned, counts = _pin_and_count(df, key_cols, order_cols, partitions)
-    acc: dict[tuple, int] = {}
-    per_key_rows: dict[tuple, list] = {}
-    for r in counts:
-        k = tuple(r[c] for c in key_cols)
-        per_key_rows.setdefault(k, []).append((r["_pid"], acc.get(k, 0), r["_n"]))
-        acc[k] = acc.get(k, 0) + r["_n"]
-    targets = []
-    for k, total in acc.items():
-        raw = target_fn(total)
-        try:
-            ts = sorted({int(t) for t in raw})
-        except TypeError:
-            ts = [int(raw)]
-        for t in ts:
-            for pid, off, n in per_key_rows[k]:
-                if off < t <= off + n:
-                    targets.append((pid, *k, t - off))
-                    break
-    spark = df.sparkSession
-    tgt_schema = ", ".join(
-        ["_pid int"]
-        + [f"{c} {t}" for c, t in df.select(*key_cols).dtypes]
-        + ["_local long"]
-    )
-    tgt = spark.createDataFrame(targets, tgt_schema)
-    hit_pids = sorted({t[0] for t in targets})
+    pinned, parts, totals = _range_pin(df, key_cols, order_cols, partitions)
+    # (pid, key, local ranks) for the partitions holding a target
+    hits = []
+    for pid, k, off, n in parts:
+        raw = target_fn(totals[k])
+        ts = {int(t) for t in (raw if isinstance(raw, Iterable) else [raw])}
+        if local := sorted(t - off for t in ts if off < t <= off + n):
+            hits.append((pid, k, local))
     w = Window.partitionBy("_pid", *key_cols).orderBy(*order_cols)
     selected = (
-        pinned.filter(F.col("_pid").isin(hit_pids))  # ≤ K partitions survive
+        pinned.filter(F.col("_pid").isin(sorted({h[0] for h in hits})))
         .withColumn("_local", F.row_number().over(w).cast("long"))
-        # K-row frame, never data-proportional
-        .join(F.broadcast(tgt), ["_pid", *key_cols, "_local"])  # broadcast-policy-exempt
+        .where(F.array_contains(
+            _at_pid(pinned, key_cols, hits, "array<bigint>"), F.col("_local")
+        ))
         .drop("_pid", "_local")
     )
     return pinned.drop("_pid"), selected
@@ -731,14 +632,9 @@ def keyed_prefix_sum(
     regime — the weighted generalization of :func:`keyed_rank_with_totals`
     (rank = prefix sum of weight ≡ 1). ``Window.partitionBy(key)
     .orderBy(...)`` would funnel each key's entire series through one
-    task; instead:
-
-    1. ``repartitionByRange`` on (key, order) — each key occupies a run
-       of consecutive globally-ordered partitions;
-    2. per-partition windowed cumsum within (partition, key) — parallel;
-    3. per-(partition, key) DECIMAL weight totals to the driver (≤
-       P + K − 1 rows, bounded by parallelism + key cardinality, never
-       data) → per-key prefix offsets joined back as a broadcast frame.
+    task; instead range-pin on (key, order), take the windowed cumsum
+    within (partition, key) in parallel, and add the key's weight total
+    in earlier partitions (:func:`_range_pin`: ≤ P + K − 1 driver rows).
 
     Weights ride through ``decimal(28,6)`` so the distributed sum is
     exact and partition-order-independent (num.py discipline); the
@@ -747,7 +643,8 @@ def keyed_prefix_sum(
     running-total shape, no single-partition window). ``order_cols``
     need not totally order rows: ties cumulate in arbitrary order
     within the tie group, so consumers must select on the ORDER value
-    (threshold crossing), not on a specific tied row.
+    (threshold crossing), not on a specific tied row. NULL keys are
+    one key.
 
     NOTE: the returned frame's cumsum window re-evaluates on EVERY
     action that consumes it (only the range-pinned input is
@@ -788,49 +685,22 @@ def keyed_prefix_sum_with_totals(
 
     from pyspark.sql import Window
 
-    p = partitions or df.sparkSession.sparkContext.defaultParallelism
-    keys = [F.col(c) for c in key_cols]
-    pinned = (
-        df.repartitionByRange(p, *keys, *[F.col(c) for c in order_cols])
-        .sortWithinPartitions(*key_cols, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn("_w", F.col(weight_col).cast(weight_type))
-        .localCheckpoint()
-    )
-    sums = pinned.groupBy("_pid", *key_cols).agg(F.sum("_w").alias("_s")).collect()
-    sums.sort(key=lambda r: r["_pid"])
+    wt = F.col(weight_col).cast(weight_type)
     # Spark returns long sums as Python int, decimal sums as Decimal —
-    # both accumulate exactly here; only the frame schema must match.
+    # both accumulate exactly on the driver
     zero = Decimal(0) if weight_type.startswith("decimal") else 0
-    acc: dict[tuple, Decimal | int] = {}
-    offsets = []
-    for r in sums:
-        k = tuple(r[c] for c in key_cols)
-        offsets.append((r["_pid"], *k, acc.get(k, zero)))
-        acc[k] = acc.get(k, zero) + (r["_s"] if r["_s"] is not None else zero)
-    spark = df.sparkSession
-    # long sums come back widened by Spark (sum(long) is long, but keep
-    # the offset/total schema at the weight type for exact joins)
-    off_type = "bigint" if weight_type == "long" else weight_type
-    key_schema = [f"{c} {t}" for c, t in df.select(*key_cols).dtypes]
-    off_schema = ", ".join(["_pid int"] + key_schema + [f"_off {off_type}"])
-    off = spark.createDataFrame(offsets, off_schema)
-    totals = spark.createDataFrame(
-        [(*k, v) for k, v in acc.items()],
-        ", ".join(key_schema + [f"total {off_type}"]),
+    pinned, parts, totals = _range_pin(
+        df, key_cols, order_cols, partitions, F.sum(wt), zero
     )
+    off_type = "bigint" if weight_type == "long" else weight_type
     w = (
         Window.partitionBy("_pid", *key_cols)
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum = (
-        # bounded P+K-row frame, never data-proportional
-        pinned.join(F.broadcast(off), ["_pid", *key_cols])  # broadcast-policy-exempt
-        .withColumn(out_col, F.sum("_w").over(w) + F.col("_off"))
-        .drop("_pid", "_off", "_w")
-    )
-    return cum, totals
+    off = _at_pid(pinned, key_cols, parts, off_type)
+    cum = pinned.withColumn(out_col, F.sum(wt).over(w) + off).drop("_pid")
+    return cum, _totals_frame(df, key_cols, totals, f"total {off_type}")
 
 
 def mann_kendall_s(
@@ -947,42 +817,29 @@ def skyline_2d(
     The naive formulation is an O(n²) dominance anti-join; this plan
     collapses to the x tier (max y per distinct x), computes the
     EXCLUSIVE prefix max of y over ascending x with the distributed
-    prefix pattern (range partition → per-partition running max →
-    ≤ P driver scalars stitched as a CASE literal — global_rank's
-    shape with MAX for SUM), then one x-keyed join back decides
-    dominance: dominated ⟺ prefix_max_below ≥ y ∨ max_at_same_x > y.
+    prefix pattern (:func:`_range_pin` folding MAX where global_rank
+    folds a count: per-partition running max + the max of earlier
+    partitions), then one x-keyed join back decides dominance:
+    dominated ⟺ prefix_max_below ≥ y ∨ max_at_same_x > y.
     ``y_col`` must be integral and fit in 32 bits below the sentinel
     (the driver prefix max starts at −2³¹)."""
     from pyspark.sql import Window
 
-    tier = df.groupBy(x_col).agg(F.max(y_col).alias("_mx_at"))
-    p = partitions or df.sparkSession.sparkContext.defaultParallelism
-    pinned = (
-        tier.repartitionByRange(p, x_col)
-        .sortWithinPartitions(x_col)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    # ≤ P scalars: per-partition max y, prefix-maxed on the driver
-    pmaxes = sorted(
-        (r["_pid"], r["m"])
-        for r in pinned.groupBy("_pid").agg(F.max("_mx_at").alias("m")).collect()
-    )
     neg = -(1 << 31)
-    offset = F.lit(neg)
-    run = neg
-    for pid, m in pmaxes:
-        offset = F.when(F.col("_pid") == pid, F.lit(run)).otherwise(offset)
-        run = max(run, m if m is not None else neg)
+    tier = df.groupBy(x_col).agg(F.max(y_col).alias("_mx_at"))
+    pinned, parts, _ = _range_pin(
+        tier, [], [x_col], partitions, F.max("_mx_at"), neg, max
+    )
     w = (
         Window.partitionBy("_pid")
         .orderBy(x_col)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    tier2 = pinned.withColumn(
-        "_mx_below",
-        F.greatest(F.coalesce(F.max("_mx_at").over(w), F.lit(neg)), offset),
-    ).select(x_col, "_mx_at", "_mx_below")
+    below = F.coalesce(F.max("_mx_at").over(w), F.lit(neg))
+    off = _at_pid(pinned, [], parts, "bigint")
+    tier2 = pinned.withColumn("_mx_below", F.greatest(below, off)).select(
+        x_col, "_mx_at", "_mx_below"
+    )
     return (
         df.join(tier2, x_col)
         .where(

@@ -508,11 +508,12 @@ LIMIT {BASKET_TOP_N}
 # (keyed exchange with map-side partials) so ranking runs on customer
 # cardinality, not fact cardinality. The three scores come from ONE
 # memoized customer tier via transforms.global_ntile_multi (VERDICT
-# r6 ask #6): each measure ranks only its narrow (measure, custkey)
-# projection and keeps the 3 exact quartile-boundary tuples; score
-# assignment is a map-side CASE, so the customer tier itself is never
-# range-exchanged (the old shape paid 3 full-frame range exchanges +
-# checkpoints).
+# r6 ask #6): the three narrow (measure, custkey) projections stack
+# into one range exchange, ranked per measure, and each measure keeps
+# its 3 exact quartile-boundary tuples (uncast: int days, count and
+# double compare in their own types); score assignment is a map-side
+# boundary count, so the customer tier itself is never range-exchanged
+# (the old shape paid 3 full-frame range exchanges + checkpoints).
 
 RFM_REF_DATE = "2025-01-01"
 RFM_BUCKETS = 4
@@ -529,8 +530,6 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("frequency"),
         dsum("o_totalprice", "monetary"),
     ).localCheckpoint(eager=False)
-    # stack_cast="double" is order-exact here: recency is int days,
-    # frequency a count (< 2^53), monetary already a double.
     scored = global_ntile_multi(
         per_cust,
         RFM_BUCKETS,
@@ -539,7 +538,6 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             (["frequency", "o_custkey"], "f_score"),
             (["monetary", "o_custkey"], "m_score"),
         ],
-        stack_cast="double",
     )
     return (
         scored.groupBy("r_score", "f_score", "m_score")
@@ -1288,7 +1286,8 @@ FROM tot t ORDER BY l_returnflag
 # (max size per distinct price), computes the EXCLUSIVE prefix max of
 # size over ascending price with the distributed-prefix pattern
 # (range partition → per-partition running max → ≤ P driver scalars
-# stitched as a CASE literal — global_rank's shape with MAX for SUM),
+# attached as one per-partition literal lookup — global_rank's shape
+# with MAX for SUM),
 # then one price-keyed join back to parts decides dominance:
 # dominated ⟺ prefix_max_below ≥ size ∨ max_at_same_price > size.
 
@@ -1911,7 +1910,6 @@ def segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         spend,
         4,
         [(["_c1", "o_custkey"], "q_from"), (["_c2", "o_custkey"], "q_to")],
-        stack_cast="double",  # cents ≪ 2^53 — order-exact
         skip_nulls=True,
     )
     return (

@@ -222,7 +222,10 @@ def test_heavy_hitter_exact_output(spark, sf_medium):
 
 def test_global_rank_and_ntile_match_window_semantics(spark):
     """Distributed global rank/ntile must agree exactly with the
-    single-partition window built-ins they replace."""
+    single-partition window built-ins they replace — also on an empty
+    and a one-row frame, and with more than 300 non-empty range
+    partitions (a per-partition CASE chain of offsets overflowed the
+    column converter's stack there)."""
     from pyspark.sql import Window
 
     from flink_learning_practise_spark.operators.transforms import (
@@ -230,72 +233,81 @@ def test_global_rank_and_ntile_match_window_semantics(spark):
         global_rank,
     )
 
-    df = spark.range(1000).selectExpr(
-        "pmod(hash(id), 97) AS score", "id"
-    )
-    got = {
-        r.id: r.global_rank
-        for r in global_rank(df, ["score", "id"]).collect()
-    }
     w = Window.orderBy("score", "id")
-    want = {
-        r.id: r.rn
-        for r in df.withColumn("rn", F.row_number().over(w)).collect()
-    }
-    assert got == want
+    for n, parts in ((1000, None), (4000, 400), (0, None), (1, None)):
+        df = spark.range(n).selectExpr(
+            "pmod(hash(id), 97) AS score", "id"
+        )
+        if parts:
+            nonempty = (
+                df.repartitionByRange(parts, "score", "id")
+                .select(F.spark_partition_id())
+                .distinct()
+                .count()
+            )
+            assert nonempty > 300, nonempty
+        got = {
+            r.id: r.global_rank
+            for r in global_rank(df, ["score", "id"], partitions=parts).collect()
+        }
+        want = {
+            r.id: r.rn
+            for r in df.withColumn("rn", F.row_number().over(w)).collect()
+        }
+        assert got == want, (n, parts)
 
-    for b in (7, 10, 1500):  # incl. more buckets than rows
-        gb = {
-            r.id: r.bucket
-            for r in global_ntile(df, b, ["score", "id"]).collect()
-        }
-        wb = {
-            r.id: r.nt
-            for r in df.withColumn("nt", F.ntile(b).over(w)).collect()
-        }
-        assert gb == wb, f"ntile({b}) mismatch"
+        for b in (7, 10, 1500):  # incl. more buckets than rows
+            gb = {
+                r.id: r.bucket
+                for r in global_ntile(df, b, ["score", "id"]).collect()
+            }
+            wb = {
+                r.id: r.nt
+                for r in df.withColumn("nt", F.ntile(b).over(w)).collect()
+            }
+            assert gb == wb, f"n={n} ntile({b}) mismatch"
 
 
 def test_global_ntile_multi_matches_window_ntile(spark):
     """Boundary-tuple multi-ntile (zero exchanges of the scored frame)
     must agree exactly with ntile() OVER for every measure, including
-    more buckets than rows."""
+    more buckets than rows and an empty and a one-row frame. Without
+    skip_nulls, a NULL measure raises instead of mis-bucketing."""
+    import pytest
     from pyspark.sql import Window
 
     from flink_learning_practise_spark.operators.transforms import (
         global_ntile_multi,
     )
 
-    df = spark.range(500).selectExpr(
-        "pmod(hash(id), 53) AS a",
-        "pmod(hash(id * 7 + 1), 11) AS b",
-        "id",
+    for n in (500, 0, 1):
+        df = spark.range(n).selectExpr(
+            "pmod(hash(id), 53) AS a",
+            "pmod(hash(id * 7 + 1), 11) AS b",
+            "id",
+        )
+        for nb in (4, 7, 800):  # incl. more buckets than rows
+            got = {
+                r.id: (r.sa, r.sb)
+                for r in global_ntile_multi(
+                    df, nb, [(["a", "id"], "sa"), (["b", "id"], "sb")]
+                ).collect()
+            }
+            want = {
+                r.id: (r.wa, r.wb)
+                for r in df.withColumn(
+                    "wa", F.ntile(nb).over(Window.orderBy("a", "id"))
+                ).withColumn(
+                    "wb", F.ntile(nb).over(Window.orderBy("b", "id"))
+                ).collect()
+            }
+            assert got == want, f"n={n} multi-ntile({nb}) mismatch"
+
+    one_null = spark.range(200).selectExpr(
+        "IF(id = 117, NULL, pmod(hash(id), 53)) AS a", "id"
     )
-    for nb in (4, 7, 800):  # incl. more buckets than rows
-        got = {
-            r.id: (r.sa, r.sb)
-            for r in global_ntile_multi(
-                df, nb, [(["a", "id"], "sa"), (["b", "id"], "sb")]
-            ).collect()
-        }
-        want = {
-            r.id: (r.wa, r.wb)
-            for r in df.withColumn(
-                "wa", F.ntile(nb).over(Window.orderBy("a", "id"))
-            ).withColumn(
-                "wb", F.ntile(nb).over(Window.orderBy("b", "id"))
-            ).collect()
-        }
-        assert got == want, f"multi-ntile({nb}) mismatch"
-        # stacked single-exchange path: same contract
-        got_s = {
-            r.id: (r.sa, r.sb)
-            for r in global_ntile_multi(
-                df, nb, [(["a", "id"], "sa"), (["b", "id"], "sb")],
-                stack_cast="double",
-            ).collect()
-        }
-        assert got_s == want, f"stacked multi-ntile({nb}) mismatch"
+    with pytest.raises(ValueError, match="NULL"):
+        global_ntile_multi(one_null, 4, [(["a", "id"], "sa")])
 
 
 def test_ewma_matches_pure_python_fold(spark):
@@ -431,8 +443,13 @@ def test_heavy_hitter_exact_property_random_corpora(spark):
 def test_keyed_rank_matches_window(spark):
     """keyed_rank_with_totals must equal row_number() OVER (PARTITION BY
     key ORDER BY ...) for every key, and totals must equal key counts —
-    across a partition count that forces keys to straddle partitions."""
+    across a partition count that forces keys to straddle partitions,
+    with a NULL key (its own group, as in the window), and on an empty
+    and a one-row frame."""
     import random
+    from collections import Counter
+
+    from pyspark.sql import Window
 
     from flink_learning_practise_spark.operators.transforms import (
         keyed_rank_with_totals,
@@ -443,23 +460,21 @@ def test_keyed_rank_matches_window(spark):
         (rng.choice(["a", "b", "c", "d"]), i, rng.uniform(-50, 50))
         for i in range(4000)
     ]
-    from pyspark.sql import Window
-
-    df = spark.createDataFrame(rows, "k string, id long, v double")
-    ranked, totals = keyed_rank_with_totals(
-        df, ["k"], ["v", "id"], "r", partitions=16
-    )
+    null_key = rows + [(None, 4000 + i, rng.uniform(-50, 50)) for i in range(400)]
     w = Window.partitionBy("k").orderBy("v", "id")
-    exp = {
-        (r.k, r.id): r.rn
-        for r in df.withColumn("rn", F.row_number().over(w)).collect()
-    }
-    got = {(r.k, r.id): r.r for r in ranked.collect()}
-    assert got == exp
-    from collections import Counter
-
-    key_counts = Counter(k for k, _, _ in rows)
-    assert {r.k: r.n for r in totals.collect()} == dict(key_counts)
+    for inp in (rows, null_key, [], rows[:1]):
+        df = spark.createDataFrame(inp, "k string, id long, v double")
+        ranked, totals = keyed_rank_with_totals(
+            df, ["k"], ["v", "id"], "r", partitions=16
+        )
+        exp = {
+            (r.k, r.id): r.rn
+            for r in df.withColumn("rn", F.row_number().over(w)).collect()
+        }
+        got = {(r.k, r.id): r.r for r in ranked.collect()}
+        assert got == exp, len(inp)
+        key_counts = Counter(k for k, _, _ in inp)
+        assert {r.k: r.n for r in totals.collect()} == dict(key_counts)
 
 
 def test_max_concurrency_brute_force(spark):
@@ -514,7 +529,8 @@ def test_max_concurrency_brute_force(spark):
 def test_keyed_select_rank_matches_window_median(spark):
     """keyed_select_rank at ceil(n/2) must pick exactly the window-based
     discrete median row per key, including keys that straddle range
-    partitions."""
+    partitions, a NULL key (its own group), and an empty and a one-row
+    frame."""
     import random
 
     from pyspark.sql import Window
@@ -528,22 +544,24 @@ def test_keyed_select_rank_matches_window_median(spark):
         (rng.choice(["a", "b", "c"]), i, rng.uniform(-10, 10))
         for i in range(3000)
     ]
-    df = spark.createDataFrame(rows, "k string, id long, v double")
-    _, sel = keyed_select_rank(
-        df, ["k"], ["v", "id"], lambda n: (n + 1) // 2, partitions=16
-    )
-    got = {r.k: (r.v, r.id) for r in sel.collect()}
+    null_key = rows + [(None, 3000 + i, rng.uniform(-10, 10)) for i in range(300)]
     w = Window.partitionBy("k").orderBy("v", "id")
-    ranked = df.withColumn("rn", F.row_number().over(w)).withColumn(
-        "n", F.count(F.lit(1)).over(Window.partitionBy("k"))
-    )
-    exp = {
-        r.k: (r.v, r.id)
-        for r in ranked.filter(
-            F.col("rn") == F.ceil(F.col("n") / 2).cast("int")
-        ).collect()
-    }
-    assert got == exp
+    for inp in (rows, null_key, [], rows[:1]):
+        df = spark.createDataFrame(inp, "k string, id long, v double")
+        _, sel = keyed_select_rank(
+            df, ["k"], ["v", "id"], lambda n: (n + 1) // 2, partitions=16
+        )
+        got = {r.k: (r.v, r.id) for r in sel.collect()}
+        ranked = df.withColumn("rn", F.row_number().over(w)).withColumn(
+            "n", F.count(F.lit(1)).over(Window.partitionBy("k"))
+        )
+        exp = {
+            r.k: (r.v, r.id)
+            for r in ranked.filter(
+                F.col("rn") == F.ceil(F.col("n") / 2).cast("int")
+            ).collect()
+        }
+        assert got == exp, len(inp)
 
 
 def test_ewma_null_poisons_as_sql_null(spark):
@@ -603,7 +621,9 @@ def test_keyed_prefix_sum_matches_window(spark):
     """Distributed per-key cumulative weight sum must equal the single-
     node window cumsum on the key/order VALUE level (tie order within
     equal order values is partition-dependent, so compare the cum at
-    each distinct (key, order) group's end — the consumer contract)."""
+    each distinct (key, order) group's end — the consumer contract) —
+    also with a NULL key (its own group) and on an empty and a one-row
+    frame."""
     import random
 
     from flink_learning_practise_spark.operators.transforms import keyed_prefix_sum
@@ -614,19 +634,22 @@ def test_keyed_prefix_sum_matches_window(spark):
         for k in ("a", "b", "c")
         for _ in range(200)
     ]
-    df = spark.createDataFrame(rows, "k string, x long, w long")
-    got = keyed_prefix_sum(df, ["k"], ["x"], "w", out_col="cw", partitions=7)
-    # end-of-group cum = sum of weights with (k, x') <= (k, x)
-    end = {
-        (r.k, r.x): float(r.m)
-        for r in got.groupBy("k", "x").agg(F.max("cw").alias("m")).collect()
-    }
-    exp: dict = {}
-    for k, x, w in rows:
-        exp[(k, x)] = exp.get((k, x), 0) + w
-    for (k, x), _ in end.items():
-        want = sum(v for (k2, x2), v in exp.items() if k2 == k and x2 <= x)
-        assert end[(k, x)] == want, (k, x)
+    null_key = rows + [(None, rng.randint(0, 5), rng.randint(1, 9)) for _ in range(200)]
+    for inp in (rows, null_key, [], rows[:1]):
+        df = spark.createDataFrame(inp, "k string, x long, w long")
+        got = keyed_prefix_sum(df, ["k"], ["x"], "w", out_col="cw", partitions=7)
+        # end-of-group cum = sum of weights with (k, x') <= (k, x)
+        end = {
+            (r.k, r.x): float(r.m)
+            for r in got.groupBy("k", "x").agg(F.max("cw").alias("m")).collect()
+        }
+        exp: dict = {}
+        for k, x, w in inp:
+            exp[(k, x)] = exp.get((k, x), 0) + w
+        assert set(end) == set(exp), len(inp)
+        for (k, x), _ in end.items():
+            want = sum(v for (k2, x2), v in exp.items() if k2 == k and x2 <= x)
+            assert end[(k, x)] == want, (k, x)
 
 
 def test_keyed_prefix_sum_global_mode(spark):
@@ -636,6 +659,10 @@ def test_keyed_prefix_sum_global_mode(spark):
     got = keyed_prefix_sum(df, [], ["x"], "w", out_col="cw", partitions=5)
     vals = {r.x: float(r.cw) for r in got.collect()}
     assert vals[0] == 2 and vals[50] == 102 and vals[99] == 200
+    for rows in ([], [(7, 3)]):  # empty and one-row frames
+        one = spark.createDataFrame(rows, "x long, w long")
+        got = keyed_prefix_sum(one, [], ["x"], "w", out_col="cw", partitions=5)
+        assert [(r.x, float(r.cw)) for r in got.collect()] == rows
 
 
 def test_mann_kendall_s_brute_force(spark):
@@ -667,24 +694,43 @@ def test_mann_kendall_s_brute_force(spark):
 
 def test_skyline_2d_brute_force(spark):
     """Distributed prefix-max skyline must equal the O(n²) dominance
-    definition on random data with heavy x/y ties."""
+    definition on random data with heavy x/y ties, on an empty and a
+    one-row frame, and with more than 300 non-empty range partitions of
+    the x tier (a per-partition CASE chain of offsets overflowed the
+    column converter's stack there)."""
     import random
+
+    import numpy as np
 
     from flink_learning_practise_spark.operators.transforms import skyline_2d
 
     rng = random.Random(13)
-    rows = [(i, float(rng.randint(0, 12)), rng.randint(0, 12)) for i in range(300)]
-    df = spark.createDataFrame(rows, "id long, x double, y int")
-    got = {r.id for r in skyline_2d(df, "x", "y", partitions=7).collect()}
-    exp = {
-        i
-        for i, x, y in rows
-        if not any(
-            (x2 <= x and y2 >= y and (x2 < x or y2 > y))
-            for _, x2, y2 in rows
-        )
-    }
-    assert got == exp
+    ties = [(i, float(rng.randint(0, 12)), rng.randint(0, 12)) for i in range(300)]
+    # ~4000 distinct x, y falling with x plus noise: a long frontier
+    wide = [
+        (i, float(x), (40000 - x) // 10 + rng.randint(0, 40))
+        for i, x in enumerate(rng.sample(range(40000), 4000))
+    ]
+    for rows, parts in ((ties, 7), (wide, 400), ([], 7), (ties[:1], 7)):
+        df = spark.createDataFrame(rows, "id long, x double, y int")
+        if parts == 400:
+            nonempty = (
+                df.select("x").distinct().repartitionByRange(parts, "x")
+                .select(F.spark_partition_id())
+                .distinct()
+                .count()
+            )
+            assert nonempty > 300, nonempty
+        got = {r.id for r in skyline_2d(df, "x", "y", partitions=parts).collect()}
+        # vectorized O(n²) dominance: row i is dominated by some j
+        x = np.array([r[1] for r in rows], dtype=float)
+        y = np.array([r[2] for r in rows], dtype=np.int64)
+        le, ge = x[None, :] <= x[:, None], y[None, :] >= y[:, None]
+        strict = (x[None, :] < x[:, None]) | (y[None, :] > y[:, None])
+        dominated = (le & ge & strict).any(axis=1)
+        exp = {r[0] for r, d in zip(rows, dominated) if not d}
+        assert got == exp, (len(rows), parts)
+        assert exp or not rows
 
 
 def test_holt_linear_matches_reference_and_poisons_nulls(spark):
@@ -774,7 +820,7 @@ def test_keyed_prefix_sum_long_weight_path_matches_decimal(spark):
 
 
 def test_global_ntile_multi_skip_nulls_matches_per_subset(spark):
-    """skip_nulls on the stacked path must equal a per-subset
+    """skip_nulls in global_ntile_multi must equal a per-subset
     global_ntile over the non-null rows of each measure (the
     segment_migration shape: measures defined on different subsets)."""
     import random
@@ -798,7 +844,6 @@ def test_global_ntile_multi_skip_nulls_matches_per_subset(spark):
         df,
         4,
         [(["m1", "id"], "b1"), (["m2", "id"], "b2")],
-        stack_cast="double",
         skip_nulls=True,
     )
     for m, b in (("m1", "b1"), ("m2", "b2")):

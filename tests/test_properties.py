@@ -551,8 +551,8 @@ def test_user_entropy_matches_math(spark, evs):
 
 # ---------------------------------------------------------------------------
 # global_ntile_multi (round 7): boundary-tuple multi-measure ntile —
-# both the per-measure and stacked single-exchange paths must equal
-# a brute-force sorted-assignment for arbitrary data/bucket shapes.
+# the stacked single-exchange path must equal a brute-force
+# sorted-assignment for arbitrary data/bucket shapes.
 
 ntile_rows = st.lists(
     st.tuples(st.integers(-50, 50), st.integers(-9, 9)),  # (a, b) measures
@@ -587,16 +587,13 @@ def test_global_ntile_multi_property(spark, rows, nb):
     )
     want_a = _brute_ntile([(a, i) for i, (a, _) in enumerate(rows)], nb)
     want_b = _brute_ntile([(b, i) for i, (_, b) in enumerate(rows)], nb)
-    for kw in ({}, {"stack_cast": "double"}):
-        got = {
-            r.id: (r.sa, r.sb)
-            for r in global_ntile_multi(
-                df, nb, [(["a", "id"], "sa"), (["b", "id"], "sb")], **kw
-            ).collect()
-        }
-        assert got == {
-            i: (want_a[i], want_b[i]) for i in range(len(rows))
-        }, f"path={kw}"
+    got = {
+        r.id: (r.sa, r.sb)
+        for r in global_ntile_multi(
+            df, nb, [(["a", "id"], "sa"), (["b", "id"], "sb")]
+        ).collect()
+    }
+    assert got == {i: (want_a[i], want_b[i]) for i in range(len(rows))}
 
 
 # ---------------------------------------------------------------------------
