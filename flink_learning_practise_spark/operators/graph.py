@@ -23,16 +23,27 @@ Scale notes:
   rounds. For adversarial long-path graphs,
   :func:`connected_components_star` implements the published fix
   (large-star/small-star) at O(log² n) rounds.
-- Lineage is truncated with ``localCheckpoint`` every few rounds so
-  plan size stays constant regardless of iteration count.
+- One lineage rule for every loop here: a round's state is
+  ``localCheckpoint(eager=False)``-ed once, right before the next round
+  or the convergence action reads it, so plan size stays constant at
+  any round count. Under AQE a lazy checkpoint is not free: the call
+  itself runs the frame's shuffle stages as Spark jobs, and only the
+  final stage waits for the first action. So a checkpoint goes only
+  where a later round or action re-reads the frame: CC's and
+  star-CC's per-round convergence collect materializes it; PageRank
+  and k-core checkpoint each round's input from round 2 on (LPA from
+  round 3, its first round being one aggregate) and never the last
+  round's output, which the consumer's own action computes (its plan
+  shows that one round in full). Loop-invariant inputs that every
+  round reads are checkpointed eagerly, once.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_CHECKPOINT_EVERY = 4
 
 
 def connected_components(
@@ -70,14 +81,14 @@ def connected_components(
         )
         .select("e.a", "e.b")
         .distinct()
-        # EAGER localCheckpoint, not persist: materializes the edge list
-        # once and truncates its lineage, so every round's plan
-        # references a compact LogicalRDD instead of re-analyzing and
-        # re-optimizing the full edge-producing pipeline (for dedup
-        # clustering, the entire near-dup pair tier) — at a handful of
-        # rounds the repeated driver-side planning of that subtree was
-        # a measurable share of wall time. The edge list is pair-count
-        # sized, far smaller than its inputs — cheap to materialize.
+        # EAGER localCheckpoint of the loop-invariant edge list: every
+        # round's plan references a compact LogicalRDD instead of
+        # re-analyzing and re-optimizing the full edge-producing
+        # pipeline (for dedup clustering, the entire near-dup pair
+        # tier) — at a handful of rounds the repeated driver-side
+        # planning of that subtree was a measurable share of wall time.
+        # The edge list is pair-count sized, far smaller than its
+        # inputs — cheap to materialize.
         .localCheckpoint(eager=True)
     )
 
@@ -88,44 +99,33 @@ def connected_components(
     labels = (
         sym.groupBy(F.col("b").alias("vertex"))
         .agg(F.min("a").alias("component"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     # Up-front sum over the initial labels: since init IS round 1's
     # output (min over neighbors), dup graphs whose clusters are
     # star-shaped from their minimum — the common case — are already at
     # fixpoint, and comparing round 1 against this sum terminates one
-    # full join+aggregate round earlier. The action itself only
-    # materializes the persisted labels the first round would have
-    # materialized anyway.
+    # full join+aggregate round earlier. Like every round's sum below,
+    # this collect is the action that materializes the checkpoint.
     prev_sum = labels.agg(F.sum("component")).collect()[0][0]
 
-    for i in range(max_iters):
+    for _ in range(max_iters):
         # every vertex offers its label to each neighbor AND itself
         # (self-loop); new label = min(offers) — monotone non-increasing
-        updated = (
+        labels = (
             sym.join(labels, sym["a"] == labels["vertex"])
             .groupBy(F.col("b").alias("vertex"))
             .agg(F.min("component").alias("component"))
+            .localCheckpoint(eager=False)
         )
-        if i % _CHECKPOINT_EVERY == _CHECKPOINT_EVERY - 1:
-            updated = updated.localCheckpoint(eager=False)
-        updated = updated.persist()
-        new_sum = updated.agg(F.sum("component")).collect()[0][0]
-        labels.unpersist()
-        labels = updated
-        if new_sum == prev_sum:  # labels only decrease ⇒ fixpoint
-            # hand back a checkpointed frame and release every cache
-            # this call pinned: repeated invocations (bench loops, a
-            # service) must not accumulate persisted label frames, and
-            # the caller must not silently re-run the whole iteration
-            # if it recomputes. Final labels are vertex-count-sized —
-            # cheap to materialize.
-            final = labels.localCheckpoint(eager=True)
-            labels.unpersist()
-            return final
+        new_sum = labels.agg(F.sum("component")).collect()[0][0]
+        # labels only decrease ⇒ fixpoint; an empty graph sums to NULL
+        # twice. The returned frame is already materialized, so the
+        # caller never re-runs the loop.
+        if new_sum == prev_sum:
+            return labels
         prev_sum = new_sum
 
-    labels.unpersist()
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds "
         "(component diameter exceeds max_iters; raise it or switch to a "
@@ -152,8 +152,8 @@ def connected_components_star(
     Each round is two grouped aggregations and two joins over the
     current edge list, all keyed the same way (AQE reuses the
     layout); convergence is detected on a scalar (count + xor-hash of
-    the canonical edge set), and lineage is truncated per round via
-    ``localCheckpoint`` — constant plan size at any round count.
+    the canonical edge set), whose collect also materializes the
+    round's lazy checkpoint (module notes).
 
     - large-star: every node connects its LARGER neighbors to the
       minimum of its neighborhood (incl. itself) — halves long tails;
@@ -165,9 +165,9 @@ def connected_components_star(
     reachable, exactly like :func:`connected_components`.
     """
     # ONE eager checkpoint of the raw edge list: vertices and the
-    # working edge set both derive from it — two separate eager
-    # checkpoints would each materialize the full upstream pipeline
-    # (for dedup clustering, the entire near-dup pair tier) once more.
+    # working edge set both derive from it, so neither re-runs the
+    # upstream pipeline (for dedup clustering, the near-dup pair tier)
+    # and neither needs a checkpoint of its own.
     raw = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .distinct()
@@ -177,15 +177,9 @@ def connected_components_star(
     # a vertex whose only edge is (v, v) must still appear in the
     # output (as its own component), exactly like connected_components.
     vertices = (
-        raw.select(F.col("u").alias("vertex"))
-        .union(raw.select("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        raw.select(F.col("u").alias("vertex")).union(raw.select("v")).distinct()
     )
-    e = (
-        raw.filter(F.col("u") != F.col("v"))
-        .localCheckpoint(eager=True)
-    )
+    e = raw.filter(F.col("u") != F.col("v"))
 
     def canon_sig(df: DataFrame):
         # order-insensitive signature of the canonical (min,max) edge set
@@ -264,7 +258,6 @@ def pagerank(
     vertices: DataFrame | None = None,
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_rounds: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a DIRECTED edge list — the
     bulk-iteration analog beside :func:`connected_components`' delta
@@ -288,9 +281,10 @@ def pagerank(
 
     Scale shape per round: one join (ranks onto out-edges, vertex key)
     + one aggregate (contributions onto the destination key) — the CC
-    loop's shape with a sum instead of a min; lineage truncated with
-    ``localCheckpoint`` every few rounds, previous round unpersisted.
-    The only driver materialization is the vertex COUNT (one scalar).
+    loop's shape with a sum instead of a min. Each round's input is
+    lazily checkpointed from round 2 on (module notes), so the returned
+    plan shows the last round in full. The only driver materialization
+    is the vertex COUNT (one scalar).
 
     Returns (vertex, pagerank) for every vertex.
     """
@@ -299,7 +293,8 @@ def pagerank(
     )
     if vertices is not None:
         v = v.union(vertices.select(F.col(src).alias("vertex")))
-    v = v.distinct().localCheckpoint(eager=True)
+    # the count is the action that materializes the lazy checkpoint
+    v = v.distinct().localCheckpoint(eager=False)
     n = v.count()
     if n == 0:
         return v.withColumn("pagerank", F.lit(0.0))
@@ -314,8 +309,6 @@ def pagerank(
         .localCheckpoint(eager=True)
     )
 
-    import math
-
     def _q9(c):
         return F.floor(c * 1e9 + F.lit(0.5)) / 1e9
 
@@ -323,6 +316,8 @@ def pagerank(
     r0 = math.floor(1.0 / n * 1e9 + 0.5) / 1e9
     ranks = v.withColumn("pagerank", F.lit(r0))
     for i in range(iterations):
+        if i:
+            ranks = ranks.localCheckpoint(eager=False)
         # per-edge contribution rounded, then DECIMAL-summed: a raw
         # double sum is partition-order-dependent (num.py rule) and
         # would both drift run-to-run and diverge from the SQL oracle
@@ -337,7 +332,7 @@ def pagerank(
             .groupBy("vertex")
             .agg(F.sum("_c").cast("double").alias("_in"))
         )
-        updated = (
+        ranks = (
             v.join(contribs, "vertex", "left")
             .select(
                 "vertex",
@@ -346,22 +341,6 @@ def pagerank(
                     + F.lit(damping) * F.coalesce(F.col("_in"), F.lit(0.0))
                 ).alias("pagerank"),
             )
-        )
-        # LAZY checkpoint per round (the CC loop's pattern, minus even
-        # the per-round action): lineage truncates when the CONSUMER's
-        # single action computes the chain, so `iterations` rounds cost
-        # one job instead of one-materialize-job-per-round (the r4
-        # persist();count();unpersist() ladder paid 6 extra jobs).
-        # links stays eagerly checkpointed above — the loop's only
-        # reused input — so no recomputation multiplies across rounds.
-        # checkpoint_rounds=False keeps the full Catalyst plan visible:
-        # the checkpoint truncates lineage to a LogicalRDD, which blinds
-        # plan audits (PLANS.md, the no-cartesian suite guard) to the
-        # loop's joins — tests audit the unchecked variant (review r5).
-        ranks = (
-            updated.localCheckpoint(eager=False)
-            if checkpoint_rounds
-            else updated
         )
     return ranks
 
@@ -514,7 +493,6 @@ def label_propagation(
     src: str = "u",
     dst: str = "v",
     iterations: int = 3,
-    checkpoint_rounds: bool = True,
 ) -> DataFrame:
     """Fixed-iteration Label Propagation communities over an undirected
     edge list — the fifth graph op beside CC / star-CC / PageRank /
@@ -532,9 +510,10 @@ def label_propagation(
     Scale shape per round: one join (labels onto the doubled edge
     list, vertex key) + one (vertex, label) count + one per-vertex
     top-1 window — per-vertex groups are degree-sized (many small
-    keys), so the window is NOT the few-huge-keys trap. Lineage is
-    checkpoint-truncated per round; ``checkpoint_rounds=False``
-    exposes the unrolled plan for audits (review r5 pagerank note).
+    keys), so the window is NOT the few-huge-keys trap. From round 3
+    on, each round's input is lazily checkpointed (module notes);
+    round 2 reads the free first round's output, one aggregate over
+    the checkpointed ``both``, without one.
 
     Returns (vertex, community).
     """
@@ -568,17 +547,16 @@ def label_propagation(
         F.min("_u").alias("community")
     )
     w = Window.partitionBy("_v").orderBy(F.desc("_c"), F.asc("community"))
-    for _ in range(iterations - 1):
-        updated = (
+    for i in range(iterations - 1):
+        if i:
+            labels = labels.localCheckpoint(eager=False)
+        labels = (
             both.join(labels, both["_u"] == labels["vertex"])
             .groupBy("_v", "community")
             .agg(F.count(F.lit(1)).alias("_c"))
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .select(F.col("_v").alias("vertex"), "community")
-        )
-        labels = (
-            updated.localCheckpoint(eager=False) if checkpoint_rounds else updated
         )
     return labels
 
@@ -589,7 +567,6 @@ def k_core(
     rounds: int = 3,
     src: str = "u",
     dst: str = "v",
-    checkpoint_rounds: bool = True,
 ) -> DataFrame:
     """Bounded-round k-core peeling over a deduplicated undirected edge
     list: each round drops every vertex with degree < k and the edges
@@ -601,10 +578,8 @@ def k_core(
 
     Each round is one degree aggregate + two LEFT SEMI joins on the
     vertex key — all shuffle-partitioned on ids, nothing driver-side,
-    and the edge frame only shrinks. ``checkpoint_rounds=False`` keeps
-    the full Catalyst plan visible for plan audits (lazy checkpoints
-    truncate lineage to a LogicalRDD, blinding the no-cartesian suite
-    guard — the PageRank loop's rule).
+    and the edge frame only shrinks. Each round's input is lazily
+    checkpointed from round 2 on (module notes).
 
     Returns (id, degree): the surviving vertices with their degree in
     the final peeled edge set.
@@ -619,15 +594,15 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("d"))
         )
 
-    for _ in range(rounds):
+    for i in range(rounds):
+        if i:
+            e = e.localCheckpoint(eager=False)
         keep = degrees(e).where(F.col("d") >= k).select("id")
         e = (
             e.join(keep.withColumnRenamed("id", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("id", "v"), "v", "left_semi")
             .select("u", "v")
         )
-        if checkpoint_rounds:
-            e = e.localCheckpoint(eager=False)
     return degrees(e).select("id", F.col("d").alias("degree"))
 
 

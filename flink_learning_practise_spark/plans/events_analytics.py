@@ -3336,21 +3336,21 @@ def winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = sel.groupBy("event_type").agg(
         F.min("value").alias("_lo"), F.max("value").alias("_hi")
     )
-    totals = pinned.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    # every key has both bounds, so the inner join keeps every row and
+    # the final aggregate's own count(1) is the per-key n
     clamped = (
         pinned.join(F.broadcast(bounds), "event_type")  # broadcast-policy-exempt: K rows
-        .join(F.broadcast(totals), "event_type")  # broadcast-policy-exempt: K rows
         .select(
             "event_type",
-            "n",
             F.greatest(
                 F.col("_lo"), F.least(F.col("_hi"), F.col("value"))
             ).alias("_cv"),
         )
     )
     return (
-        clamped.groupBy("event_type", "n")
+        clamped.groupBy("event_type")
         .agg(
+            F.count(F.lit(1)).alias("n"),
             (
                 F.floor(
                     F.sum(F.col("_cv").cast(DEC)).cast("double")
@@ -3359,7 +3359,7 @@ def winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + F.lit(0.5)
                 )
                 / 1e6
-            ).alias("winsorized_mean")
+            ).alias("winsorized_mean"),
         )
         .orderBy("event_type")
     )

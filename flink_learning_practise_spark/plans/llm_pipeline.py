@@ -763,9 +763,10 @@ def _shared_cluster_tier(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_survivors_quality, split_repair, and the three curation
     audits) each re-ran the full iterative CC loop (edge checkpoint +
     per-round join/aggregate/convergence-collect jobs) over the SAME
-    edge set per bench pass. connected_components already returns an
-    eagerly localCheckpointed, vertex-count-bounded frame, so the memo
-    just holds that reference."""
+    edge set per bench pass. connected_components returns its converged
+    round's lazily checkpointed, vertex-count-bounded frame, which the
+    convergence collect has already materialized, so the memo just
+    holds that reference."""
     from ..operators import graph
 
     pairs = _shared_pair_tier(spark, sf_dir)

@@ -54,11 +54,24 @@ def test_parity_sf0001(spark, name):
     assert not errors, f"{name}: " + "; ".join(errors)
 
 
-@pytest.mark.parametrize("name", ["q_dupgraph_degrees", "q_curation_funnel"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_dupgraph_degrees",
+        "q_curation_funnel",
+        "q_dedup_clusters",
+        "q_dedup_clusters_star",
+        "q_pagerank_dupgraph",
+        "q_lpa_communities",
+        "q_kcore_dupgraph",
+    ],
+)
 def test_parity_zero_documents(spark, sf_small, tmp_path, name):
     """A corpus with no documents (hence no near-duplicate pairs): the
     ratio columns whose divisor is then 0 are NULL, as in DuckDB, not
-    an ANSI DIVIDE_BY_ZERO. The other tables are copied from sf0.001."""
+    an ANSI DIVIDE_BY_ZERO, and the graph loops run on an empty edge
+    list (CC converges on a NULL sum, PageRank takes its n == 0 path).
+    The other tables are copied from sf0.001."""
     import shutil
 
     import pyarrow.parquet as pq

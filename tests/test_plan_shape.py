@@ -400,39 +400,48 @@ def test_customer_distribution_preaggregates_orders(spark, sf_medium):
     assert "HashAggregate" in final[join_pos:]
 
 
+def _assert_final_round_plan(df, joins: int) -> None:
+    """The graph loops checkpoint a round's input, never the last
+    round's output, so the returned plan shows the final round in full
+    (earlier rounds sit behind a LogicalRDD). Audit it: no cartesian,
+    no nested-loop join, and exactly that round's joins."""
+    plan = plan_of(df)
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoop" not in plan
+    assert plan.count("Join") == joins
+
+
 def test_pagerank_round_plan_visible_and_clean(spark):
-    """The per-round lazy localCheckpoint truncates pagerank's lineage
-    to a LogicalRDD, which blinds PLANS.md and the suite-wide cartesian
-    guard to the loop's joins (review r5). The unchecked variant
-    exposes the full unrolled plan — audit it here: no cartesian, no
-    nested-loop join, and exactly the per-round join pair."""
+    """PageRank's final round: links ⋈ ranks and vertices ⋈
+    contributions."""
     from flink_learning_practise_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (1, 3)], "s long, d long"
     )
-    df = pagerank(edges, "s", "d", iterations=2, checkpoint_rounds=False)
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoop" not in plan
-    # 2 rounds x (links⋈ranks + v left⋈contribs) — joins ARE in the plan
-    assert plan.count("Join") >= 4
+    _assert_final_round_plan(pagerank(edges, "s", "d", iterations=2), joins=2)
 
 
 def test_lpa_round_plan_visible_and_clean(spark):
-    """Same blindness compensation as the pagerank test above: LPA's
-    per-round lazy localCheckpoint hides the loop joins from explain;
-    audit the checkpoint_rounds=False variant."""
+    """LPA's final round: one join puts the previous labels onto the
+    doubled edge list."""
     from flink_learning_practise_spark.operators.graph import label_propagation
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (1, 4)], "u long, v long"
     )
-    df = label_propagation(edges, iterations=3, checkpoint_rounds=False)
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoop" not in plan
-    assert plan.count("Join") >= 2  # rounds 2 and 3 (round 1 is join-free)
+    _assert_final_round_plan(label_propagation(edges, iterations=3), joins=1)
+
+
+def test_kcore_round_plan_visible_and_clean(spark):
+    """k-core's final round: two LEFT SEMI joins, which the closing
+    degree count reads twice (u side and v side)."""
+    from flink_learning_practise_spark.operators.graph import k_core
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (1, 4)], "u long, v long"
+    )
+    _assert_final_round_plan(k_core(edges, k=2, rounds=3), joins=4)
 
 
 def test_plans_md_covers_every_registered_query():

@@ -5,6 +5,12 @@ line), run PASSES noop-sink passes (pass 0 discarded for codegen
 warm-up) and print the min/spread; with --plans DIR also dump
 ``explain("formatted")`` of the query to ``DIR/<query>_<tag>.txt``.
 
+Each query's plan construction and its noop write run under job groups
+of their own, so next to min and spread the best pass is split into
+``build_s``/``build_jobs`` (plan construction, including the Spark jobs
+it launches eagerly) and ``exec_s``/``exec_jobs`` (the write). A tier
+build is all construction.
+
 Usage:
   python tools/perf_probe.py [--plans plans/r12 --tag before]
                              [--passes 3] [--top 25 | q_a q_b ...]
@@ -18,6 +24,7 @@ iteration.
 from __future__ import annotations
 
 import argparse
+import itertools
 import json
 import os
 import sys
@@ -68,32 +75,49 @@ def main() -> None:
         lambda it: it, "id long").write.mode("overwrite").format("noop").save()
 
     tiers = shared_tiers()
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    groups = itertools.count()
 
-    def run_once(name: str) -> float:
+    def timed(fn, label: str) -> tuple[float, str, object]:
+        group = f"probe-{next(groups)}"
+        sc.setJobGroup(group, label)
         t0 = time.perf_counter()
-        df = qs[name].fn(spark, sf_dir)
-        df.write.mode("overwrite").format("noop").save()
-        return time.perf_counter() - t0
+        out = fn()
+        return time.perf_counter() - t0, group, out
+
+    def jobs(group: str) -> int:
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def run_once(name: str) -> tuple[float, str, float, str]:
+        build_s, build_g, df = timed(
+            lambda: qs[name].fn(spark, sf_dir), f"probe:{name}:build")
+        exec_s, exec_g, _ = timed(
+            lambda: df.write.mode("overwrite").format("noop").save(),
+            f"probe:{name}:exec")
+        return build_s, build_g, exec_s, exec_g
 
     needed_tiers = {
         t: (b, cons) for t, (b, cons) in tiers.items()
         if any(n in cons for n in names)
     }
-    samples: dict[str, list[float]] = {n: [] for n in names}
-    tier_samples: dict[str, list[float]] = {t: [] for t in needed_tiers}
+    # per pass: (build_s, build_jobs, exec_s, exec_jobs)
+    samples: dict[str, list[tuple]] = {n: [] for n in names}
+    tier_samples: dict[str, list[tuple]] = {t: [] for t in needed_tiers}
     for p in range(args.passes + 1):
         reset_shared_caches()
+        pending = []
         for _t, (builder, _c) in needed_tiers.items():
-            tb0 = time.perf_counter()
-            builder(spark, sf_dir)
-            if p > 0:
-                tier_samples[_t].append(time.perf_counter() - tb0)
+            tb, tg, _ = timed(lambda: builder(spark, sf_dir), f"probe:{_t}")
+            pending.append((tier_samples[_t], tb, tg, 0.0, None))
         for n in names:
-            spark.sparkContext.setJobDescription(f"probe:{n}")
-            t = run_once(n)
-            spark.sparkContext.setJobDescription(None)
-            if p > 0:
-                samples[n].append(t)
+            pending.append((samples[n], *run_once(n)))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status tracker fills from the listener bus; let it catch up
+        bus.waitUntilEmpty(60_000)
+        if p > 0:
+            for out, bs, bg, es, eg in pending:
+                out.append((bs, jobs(bg), es, jobs(eg) if eg else 0))
 
     if args.plans:
         os.makedirs(args.plans, exist_ok=True)
@@ -104,19 +128,20 @@ def main() -> None:
             with open(os.path.join(args.plans, f"{n}_{args.tag}.txt"), "w") as f:
                 f.write(txt)
 
-    print(f"{'min':>8} {'spread':>7}  query   (passes={args.passes}, sf={sf_dir})")
+    print(f"{'min':>8} {'spread':>7} {'build_s':>8} {'build_jobs':>10} "
+          f"{'exec_s':>8} {'exec_jobs':>9}  query   "
+          f"(passes={args.passes}, sf={sf_dir}; split of the best pass)")
     total = 0.0
-    for t, s in tier_samples.items():
-        mn = min(s)
+    rows = [(f"[tier] {t}", s) for t, s in tier_samples.items()]
+    rows += [(n, samples[n]) for n in names]
+    for label, s in rows:
+        runs = [b + e for b, _bj, e, _ej in s]
+        mn = min(runs)
         total += mn
-        spread = (max(s) - mn) / max(mn, 1e-9)
-        print(f"{mn:8.3f} {spread:7.2f}  [tier] {t}  {[round(x, 3) for x in s]}")
-    for n in names:
-        s = samples[n]
-        mn = min(s)
-        total += mn
-        spread = (max(s) - mn) / max(mn, 1e-9)
-        print(f"{mn:8.3f} {spread:7.2f}  {n}  {[round(x, 3) for x in s]}")
+        spread = (max(runs) - mn) / max(mn, 1e-9)
+        b, bj, e, ej = s[runs.index(mn)]
+        print(f"{mn:8.3f} {spread:7.2f} {b:8.3f} {bj:10d} {e:8.3f} {ej:9d}  "
+              f"{label}  {[round(x, 3) for x in runs]}")
     print(f"{total:8.3f}          TOTAL (incl. tier builds)")
     spark.stop()
 
