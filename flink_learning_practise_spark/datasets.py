@@ -41,8 +41,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # memo stores the unevaluated DataFrame (a logical plan — no rows, no
 # results; every action still scans the parquet files in full), keyed
 # by (session, absolute path, mtime_ns, size) so a rewritten file or a
-# fresh session can never serve a stale plan. Kill switch:
-# SPARK_GRAFT_LOAD_MEMO=0.
+# fresh session can never serve a stale plan.
 _PLAN_MEMO: dict[tuple, DataFrame] = {}
 
 
@@ -59,22 +58,20 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     if table not in TABLES:
         raise ValueError(f"unknown table {table!r}; expected one of {TABLES}")
     path = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-    key = None
-    if os.environ.get("SPARK_GRAFT_LOAD_MEMO", "1") == "1":
-        try:
-            st = os.stat(path)
-            key = (
-                spark.sparkContext.applicationId,
-                path,
-                st.st_mtime_ns,
-                st.st_size,
-            )
-        except OSError:
-            key = None  # let spark.read raise its own error below
-        if key is not None:
-            memo = _PLAN_MEMO.get(key)
-            if memo is not None:
-                return memo
+    try:
+        st = os.stat(path)
+        key = (
+            spark.sparkContext.applicationId,
+            path,
+            st.st_mtime_ns,
+            st.st_size,
+        )
+    except OSError:
+        key = None  # let spark.read raise its own error below
+    if key is not None:
+        memo = _PLAN_MEMO.get(key)
+        if memo is not None:
+            return memo
     if table == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)

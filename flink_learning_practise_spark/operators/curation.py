@@ -228,13 +228,10 @@ def pack_sequences(
 
 
 def decontaminate(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    benchmark_pred: Column,
-    k: int = 3,
+    sh: DataFrame, id_col: str, benchmark_pred: Column
 ) -> DataFrame:
-    """Benchmark decontamination: flag training documents sharing any
+    """Benchmark decontamination over a :func:`~.dedup.doc_shingle_frame`
+    ``(id, _sh, _n)`` frame: flag training documents sharing any
     k-word shingle with the held-out benchmark set (rows matching
     ``benchmark_pred``), with the count of distinct shared shingles.
 
@@ -242,28 +239,16 @@ def decontaminate(
     thousands of docs, not billions) → broadcast; the training side
     streams through one explode + broadcast semi-join + count, so the
     full corpus is never shuffled. Production pipelines use k of 8-13
-    (n-gram collision at k=3 is common English); k is a parameter.
+    (n-gram collision at k=3 is common English); k is a parameter of
+    :func:`~.dedup.doc_shingle_frame`.
 
-    ``benchmark_pred`` is evaluated against ``df`` itself (any column
-    works — a source label, an id rule), BEFORE shingling: the
-    exploded frame only carries (id, shingle).
+    ``benchmark_pred`` splits ``sh`` into its two sides. It may name
+    any column of the frame ``sh`` was projected from (a source label,
+    an id rule), because Spark resolves a filter's missing columns
+    through the projection — but not once ``sh`` is a checkpoint, which
+    keeps only ``(id, _sh, _n)``. Both sides read the SAME shingles, so
+    a checkpointed ``sh`` shingles the corpus once, not once per side.
     """
-    from .dedup import doc_shingle_frame
-
-    return decontaminate_from_shingles(
-        doc_shingle_frame(df, id_col, text_col, k), id_col, benchmark_pred
-    )
-
-
-def decontaminate_from_shingles(
-    sh: DataFrame, id_col: str, benchmark_pred: Column
-) -> DataFrame:
-    """:func:`decontaminate` over a pre-shingled ``(id, _sh, ...)``
-    frame (:func:`~.dedup.doc_shingle_frame` / the shared checkpointed
-    shingle tier); ``benchmark_pred`` must reference only columns
-    present on ``sh``. Both split sides read the SAME materialized
-    shingles instead of re-running the interpreted shingling chain
-    once per side."""
     bench_sh = (
         sh.filter(benchmark_pred)
         .select(F.explode_outer("_sh").alias("shingle"))
@@ -443,18 +428,19 @@ def boilerplate_strip(
 
 
 def decontaminate_neardup(
-    df: DataFrame,
+    sh: DataFrame,
     id_col: str,
-    text_col: str,
     benchmark_pred: Column,
-    k: int = 3,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """NEAR-DUP benchmark decontamination: training documents whose
-    k-shingle Jaccard against some benchmark document reaches ``threshold``
-    — catches paraphrases and near-copies that share most (not
-    necessarily all) shingles, where :func:`decontaminate`'s
-    any-shared-shingle flag is the high-recall/low-precision first pass.
+    """NEAR-DUP benchmark decontamination over a
+    :func:`~.dedup.doc_shingle_frame` ``(id, _sh, _n)`` frame: training
+    documents whose k-shingle Jaccard against some benchmark document
+    reaches ``threshold`` — catches paraphrases and near-copies that
+    share most (not necessarily all) shingles, where
+    :func:`decontaminate`'s any-shared-shingle flag is the
+    high-recall/low-precision first pass. ``benchmark_pred`` splits
+    ``sh`` as in :func:`decontaminate`.
 
     Scale shape: the benchmark side joins UNHINTED — a real eval set is
     bounded and AQE will broadcast it, but ``benchmark_pred`` can also
@@ -462,33 +448,12 @@ def decontaminate_neardup(
     1-in-5 split), and a hard hint would force that build side at any
     size (BROADCAST_POLICY — review r4 caught the original hint here).
     Candidates are bounded by benchmark docs sharing a shingle, and
-    the exact Jaccard verifies inline — both shingle-set sizes are
-    computed from the array BEFORE exploding (``size(shingle_array)``),
-    so the corpus is shingled once and never windowed on content.
+    the exact Jaccard verifies inline — both shingle-set sizes are the
+    frame's ``_n``, taken BEFORE exploding, so the corpus is never
+    windowed on content.
 
     Returns (id, bench_id, jaccard) for every flagged pair.
     """
-    from .dedup import doc_shingle_frame
-
-    return decontaminate_neardup_from_shingles(
-        doc_shingle_frame(df, id_col, text_col, k), id_col,
-        benchmark_pred, threshold=threshold,
-    )
-
-
-def decontaminate_neardup_from_shingles(
-    sh: DataFrame,
-    id_col: str,
-    benchmark_pred: Column,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """:func:`decontaminate_neardup` over a pre-shingled
-    ``(id, _sh, _n)`` frame (:func:`~.dedup.doc_shingle_frame` / the
-    shared checkpointed shingle tier). ``benchmark_pred`` must reference
-    only columns present on ``sh`` (the registered query's
-    ``doc_id %`` rule qualifies); both split sides then read the SAME
-    materialized shingles instead of re-running the interpreted
-    shingling chain per side."""
 
     def sized_shingles(frame: DataFrame, out_id: str, n_col: str) -> DataFrame:
         # The join key is the 8-byte xxhash64 of the shingle, not the

@@ -16,6 +16,15 @@ Four tiers, trading exactness for scale:
 - :func:`simhash_pairs` — 63-bit SimHash + band blocking + Hamming
   verification. Cheapest signature; catches small-edit near-dups.
 
+Input format: the shingle operators (:func:`ngram_jaccard_pairs`,
+:func:`containment_pairs`, :func:`minhash_signatures`,
+:func:`minhash_lsh_pairs`, and ``curation.decontaminate`` /
+``decontaminate_neardup``) take the ``(id, _sh, _n)`` frame built by
+:func:`doc_shingle_frame`, never raw text, so the interpreted shingling
+pass runs once per corpus however many of them read it. NULL text has
+no shingles: :func:`doc_shingle_frame` drops such documents, so they
+are never a pair member or a decontamination hit.
+
 Hashing: MinHash bases and LSH band buckets use Spark's built-in
 ``xxhash64`` (JVM-side, seedable via extra literal args) —
 deterministic across runs and cluster layouts. SimHash token hashes
@@ -115,37 +124,28 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ).select(id_col, "n_copies")
 
 
-def doc_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(id, shingle) exploded inverted-index rows, distinct per doc.
-
-    ``explode_outer``, not ``explode``: plain explode plants a
-    ``size(arr) > 0`` pruning filter below the generator, and because
-    the shingle CASE expression isn't foldable the filter RE-EVALUATES
-    the whole shingling per row (measured ~40% of the ngram tier's
-    runtime). shingle_array never returns an empty array, so the outer
-    variant is row-identical and skips the filter."""
-    return widen(df).select(
-        F.col(id_col),
-        F.explode_outer(shingle_array(normalize(F.col(text_col)), k)).alias("shingle"),
-    )
-
-
 def doc_shingle_frame(
     df: DataFrame, id_col: str, text_col: str, k: int = 3
 ) -> DataFrame:
     """(id, _sh, _n): each doc's distinct k-word shingle array plus its
-    size — the staging frame the PPJoin / containment / near-dup
-    decontamination family shares.
+    size — the one input of the PPJoin / containment / MinHash /
+    decontamination family.
+
+    A document whose text is NULL has no shingles and gets no row
+    (the oracle's shingle CTE gives it no shingle rows either). Kept,
+    ``shingle_array`` would turn it into ``[NULL]`` with ``_n = 1``,
+    and since ``xxhash64(NULL)`` is a constant, every NULL-text doc
+    would match every other at score 1.0.
 
     The normalize→split→shingle chain is interpreted (HOF lambdas never
     enter whole-stage codegen), so it is the most expensive per-row
     work in the dedup family; at 100 TB this frame is the staging table
     a pipeline materializes once and every report reads (guide §2.4).
     ``plans/llm_pipeline._shared_shingle_tier`` checkpoints it once per
-    (session, sf_dir); the ``*_from_shingles`` operator variants below
-    consume it without re-shingling."""
+    (session, sf_dir), and every registered near-dup query reads that
+    checkpoint."""
     return (
-        widen(df)
+        widen(df.filter(F.col(text_col).isNotNull()))
         .select(
             F.col(id_col),
             shingle_array(normalize(F.col(text_col)), k).alias("_sh"),
@@ -155,14 +155,13 @@ def doc_shingle_frame(
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame,
+    sh: DataFrame,
     id_col: str,
-    text_col: str,
-    k: int = 3,
     threshold: float = 0.8,
     df_cap: int = 100,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (id_a < id_b, jaccard >= τ).
+    """Exact n-gram Jaccard near-dup pairs (id_a < id_b, jaccard >= τ)
+    over a :func:`doc_shingle_frame` ``(id, _sh, _n)`` frame.
 
     Inverted-index join: docs sharing no shingle never meet, so the join
     is driven by shared-shingle buckets rather than the full cross
@@ -195,22 +194,6 @@ def ngram_jaccard_pairs(
     default cap the guard is inert on this corpus (max DF at sf0.1 is
     25), so parity with the exact oracle is unchanged.
     """
-    return ngram_jaccard_pairs_from_shingles(
-        doc_shingle_frame(df, id_col, text_col, k), id_col,
-        threshold=threshold, df_cap=df_cap,
-    )
-
-
-def ngram_jaccard_pairs_from_shingles(
-    sh: DataFrame,
-    id_col: str,
-    threshold: float = 0.8,
-    df_cap: int = 100,
-) -> DataFrame:
-    """:func:`ngram_jaccard_pairs` over a pre-shingled ``(id, _sh, _n)``
-    frame (:func:`doc_shingle_frame`) — the entry point for the shared
-    checkpointed shingle staging tier, so the interpreted shingling pass
-    is paid once per pipeline run instead of once per consumer."""
     ceil_tau = f"CAST(ceil({threshold} * _n) AS INT)"
     # carry each doc's FULL shingle array through the prefix explode:
     # the candidate join then verifies inline (array_intersect on the
@@ -299,14 +282,13 @@ def ngram_jaccard_pairs_from_shingles(
 
 
 def containment_pairs(
-    df: DataFrame,
+    sh: DataFrame,
     id_col: str,
-    text_col: str,
-    k: int = 3,
     threshold: float = 0.9,
     df_cap: int = 100,
 ) -> DataFrame:
-    """Asymmetric CONTAINMENT join: directional pairs (a, b) with
+    """Asymmetric CONTAINMENT join over a :func:`doc_shingle_frame`
+    ``(id, _sh, _n)`` frame: directional pairs (a, b) with
     |A ∩ B| / |A| >= tau — catches subset duplication (a quoted doc, a
     wrapper page embedding another) that symmetric Jaccard misses when
     the container is much larger than the contained doc.
@@ -324,30 +306,14 @@ def containment_pairs(
     once per VERIFIED candidate, unhinted per BROADCAST_POLICY. The
     same df_cap skew guard as :func:`ngram_jaccard_pairs` bounds
     hot-shingle buckets (inert on this corpus — max DF 25).
+
+    Probe prefix, postings index and verification arrays all read
+    ``sh``, so pass a checkpointed frame (the shared shingle tier) to
+    shingle the corpus once rather than three times.
     """
-    # lazy checkpoint: the raw form still materializes its own shingle
-    # base once (probe/index/verify all read it); the registered query
-    # consumes the SHARED eagerly-checkpointed tier via the
-    # ``_from_shingles`` variant instead.
-    return containment_pairs_from_shingles(
-        doc_shingle_frame(df, id_col, text_col, k).localCheckpoint(eager=False),
-        id_col, threshold=threshold, df_cap=df_cap,
-    )
-
-
-def containment_pairs_from_shingles(
-    base: DataFrame,
-    id_col: str,
-    threshold: float = 0.9,
-    df_cap: int = 100,
-) -> DataFrame:
-    """:func:`containment_pairs` over a pre-shingled ``(id, _sh, _n)``
-    frame — pass an (ideally checkpointed) :func:`doc_shingle_frame`;
-    probe prefix, postings index and the verification arrays all read
-    it without re-shingling."""
     ceil_tau = f"CAST(ceil({threshold} * _n) AS INT)"
     probe = (
-        base.withColumn(
+        sh.withColumn(
             # xxhash64 prefix order + hashed prefix entries, same
             # rationale as ngram_jaccard_pairs: any fixed total order is
             # exact, longs shuffle/sort cheaper than strings, and the
@@ -366,7 +332,7 @@ def containment_pairs_from_shingles(
         )
         .repartition("shingle")
     )
-    index = base.select(
+    index = sh.select(
         F.col(id_col).alias("id_b"),
         F.col("_n").alias("n_b"),
         F.explode_outer("_sh").alias("_s"),
@@ -398,8 +364,8 @@ def containment_pairs_from_shingles(
         .select("id_a", "n_a", "id_b")
         .distinct()
     )
-    av = base.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sha"))
-    bv = base.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_shb"))
+    av = sh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sha"))
+    bv = sh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_shb"))
     verified = (
         cand.join(av, "id_a")
         .join(bv, "id_b")
@@ -427,24 +393,15 @@ def near_dedup_survivors(
 
 
 def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 3, num_hashes: int = 64
-) -> DataFrame:
-    """MinHash signature per doc, computed entirely row-wise (no explode,
-    no shuffle): each shingle is hashed to a long ONCE, then the
-    ``num_hashes`` seeded values derive from that long — 1 string hash +
-    num_hashes fixed-width hashes per shingle instead of num_hashes
-    string hashes. The signature depends only on the doc's own shingles,
-    so at 100 TB this stage is a pure map over the scan."""
-    return minhash_signatures_from_shingles(
-        doc_shingle_frame(df, id_col, text_col, k), id_col, num_hashes
-    )
-
-
-def minhash_signatures_from_shingles(
     sh: DataFrame, id_col: str, num_hashes: int = 64
 ) -> DataFrame:
-    """:func:`minhash_signatures` over a pre-shingled ``(id, _sh, ...)``
-    frame (:func:`doc_shingle_frame` / the shared shingle tier)."""
+    """MinHash signature per doc of a :func:`doc_shingle_frame` frame,
+    computed entirely row-wise (no explode, no shuffle): each shingle
+    is hashed to a long ONCE, then the ``num_hashes`` seeded values
+    derive from that long — 1 string hash + num_hashes fixed-width
+    hashes per shingle instead of num_hashes string hashes. The
+    signature depends only on the doc's own shingles, so at 100 TB this
+    stage is a pure map over the scan."""
     max_long = 9223372036854775807
     return sh.select(
         id_col,
@@ -459,40 +416,24 @@ def minhash_signatures_from_shingles(
 
 
 def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Near-dup pairs via MinHash + banded LSH + exact verification.
-
-    Candidates = docs agreeing on at least one band (rows/band = 4 with
-    the defaults → catches pairs with Jaccard well below 0.8, then the
-    exact check prunes). Work is linear in candidate pairs, not O(n²).
-    """
-    return minhash_lsh_pairs_from_shingles(
-        doc_shingle_frame(df, id_col, text_col, k), id_col,
-        num_hashes=num_hashes, bands=bands, threshold=threshold,
-    )
-
-
-def minhash_lsh_pairs_from_shingles(
     sh: DataFrame,
     id_col: str,
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.8,
 ) -> DataFrame:
-    """:func:`minhash_lsh_pairs` over a pre-shingled ``(id, _sh, ...)``
-    frame. With a CHECKPOINTED frame (the shared shingle tier) the
-    signature pass and the exact-Jaccard verification arrays both read
-    materialized shingles — the raw form re-ran the interpreted
-    shingling chain for each (Catalyst does no cross-branch CSE)."""
+    """Near-dup pairs via MinHash + banded LSH + exact verification,
+    over a :func:`doc_shingle_frame` ``(id, _sh, _n)`` frame.
+
+    Candidates = docs agreeing on at least one band (rows/band = 4 with
+    the defaults → catches pairs with Jaccard well below 0.8, then the
+    exact check prunes). Work is linear in candidate pairs, not O(n²).
+    The signature pass and the verification arrays both read ``sh``
+    (Catalyst does no cross-branch CSE), so pass a checkpointed frame
+    (the shared shingle tier) to shingle the corpus once.
+    """
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures_from_shingles(sh, id_col, num_hashes)
+    sig = minhash_signatures(sh, id_col, num_hashes)
     # repartition on the join key BEFORE self-joining: both join sides
     # then share one ReusedExchange, so signatures are computed once, and
     # the exchange already satisfies the join's required partitioning.

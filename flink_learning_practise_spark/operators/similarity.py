@@ -126,41 +126,6 @@ def plane_signs(planes: int, dim: int, tables: int) -> list[list[list[float]]]:
     ]
 
 
-def hyperplane_bucket_expr(emb_col: str, planes: int, dim: int, table: int = 0) -> str:
-    """Deterministic random-hyperplane LSH bucket id for one hash table.
-
-    The sign matrix does not depend on the row, so it is derived ONCE
-    in Python (:func:`plane_signs`) and inlined as a nested array
-    literal — constant-folded to a single plan object, so the per-row
-    work is just the planes× dot products (the previous formulation
-    recomputed planes×dim hash calls per row inside the lambda, which
-    Catalyst cannot fold). Bucket bit p = sign of dot(plane_p, v).
-
-    Deliberately a lambda fold, NOT an unrolled planes×dim expression:
-    it runs once per ROW, where interpreted HOF eval is cheap, and the
-    unrolled ~512-term tree costs more in optimizer/Janino time than it
-    ever saves (measured 17s first-run vs 0.7s)."""
-    signs = plane_signs(planes, dim, table + 1)[table]
-    lit = (
-        "array("
-        + ",".join(
-            "array(" + ",".join("1.0D" if v > 0 else "-1.0D" for v in plane) + ")"
-            for plane in signs
-        )
-        + ")"
-    )
-    plane_dot = (
-        f"aggregate(zip_with({emb_col}, element_at({lit}, p + 1), "
-        f"(x, s) -> CAST(x AS DOUBLE) * s), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    return (
-        f"aggregate(transform(sequence(0, {planes - 1}), p -> "
-        f"CASE WHEN ({plane_dot}) > 0 THEN shiftleft(CAST(1 AS BIGINT), p) ELSE CAST(0 AS BIGINT) END), "
-        f"CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-
-
 def _signs_literal(signs: list[list[list[float]]]) -> str:
     """SQL nested-array literal for a [table][plane][dim] sign matrix."""
     return (
@@ -179,7 +144,15 @@ def _signs_literal(signs: list[list[list[float]]]) -> str:
 
 
 def _table_buckets_expr(emb_col: str, planes: int, dim: int, tables: int) -> str:
-    """Array of (table, bucket) structs — one LSH bucket per table."""
+    """Array of (table, bucket) structs — one LSH bucket per table;
+    bucket bit p = sign of dot(plane_p, v).
+
+    The sign matrix is derived once in Python and inlined as a literal,
+    so the per-row work is just the dot products. Deliberately a lambda
+    fold, NOT an unrolled planes×dim expression: it runs once per row,
+    where interpreted HOF eval is cheap, and the unrolled ~512-term
+    tree costs more in optimizer/Janino time than it ever saves
+    (measured 17 s first run vs 0.7 s)."""
     lit = _signs_literal(plane_signs(planes, dim, tables))
     plane_dot = (
         f"aggregate(zip_with({emb_col}, element_at(element_at({lit}, t + 1), p + 1), "

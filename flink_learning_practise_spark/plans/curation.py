@@ -159,7 +159,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rule, so both sides filter the SAME materialized checkpoint
     from .llm_pipeline import _shared_shingle_tier
 
-    return curation.decontaminate_from_shingles(
+    return curation.decontaminate(
         _shared_shingle_tier(spark, sf_dir), "doc_id",
         F.col("doc_id") % DECON_MOD == 0,
     )
@@ -415,7 +415,7 @@ def decontaminate_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the interpreted shingling chain once per side
     from .llm_pipeline import _shared_shingle_tier
 
-    return curation.decontaminate_neardup_from_shingles(
+    return curation.decontaminate_neardup(
         _shared_shingle_tier(spark, sf_dir), "doc_id",
         F.col("doc_id") % NEARDUP_MOD == 0, threshold=NEARDUP_TAU,
     )
@@ -951,7 +951,7 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .llm_pipeline import _shared_shingle_tier
 
     flagged = (
-        curation.decontaminate_neardup_from_shingles(
+        curation.decontaminate_neardup(
             _shared_shingle_tier(spark, sf_dir),
             "doc_id",
             F.col("doc_id") % NEARDUP_MOD == 0,
@@ -972,7 +972,8 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(flagged, "doc_id", "left")  # unhinted: the #113 policy call
         .withColumn(
             "_lvl",
-            F.when(~F.col("keep"), 0)
+            # a NULL keep fails the gate, as COALESCE(keep, FALSE) in the oracle
+            F.when(~F.coalesce(F.col("keep"), F.lit(False)), 0)
             .when(F.col("_rn") != 1, 1)
             .when(
                 (F.col("doc_id") % NEARDUP_MOD == 0)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from flink_learning_practise_spark import datasets
 from flink_learning_practise_spark.sinks import batch as bsink
 from flink_learning_practise_spark.sinks.jdbc import build_upsert_sql
 from flink_learning_practise_spark.sources import batch as bsrc
@@ -246,3 +247,20 @@ def test_zorder_layout_skips_files_in_both_dimensions(spark, tmp_path):
         assert candidates(2, 3, v) <= (2 * len(stats)) // 3, f"y={v} not selective"
     # nothing lost
     assert spark.read.parquet(path).count() == 20000
+
+
+def test_load_memo_hits_on_second_call(spark, sf_small):
+    """Second load() of the same (path, mtime, size) must return the
+    memoized plan object itself — the fast path the r12 driver-overhead
+    win depends on."""
+    datasets._PLAN_MEMO.clear()
+    a = datasets.load(spark, sf_small, "documents")
+    n_after_first = len(datasets._PLAN_MEMO)
+    b = datasets.load(spark, sf_small, "documents")
+    assert b is a, "load() memo missed on an identical second call"
+    assert len(datasets._PLAN_MEMO) == n_after_first
+    # the memo key carries the session + file identity, so a rewritten
+    # file or another session can never serve this entry
+    key = next(iter(datasets._PLAN_MEMO))
+    assert key[0] == spark.sparkContext.applicationId
+    assert key[1].endswith("documents.parquet")

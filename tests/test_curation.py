@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from flink_learning_practise_spark.operators import curation
+from flink_learning_practise_spark.operators import curation, dedup
 
 
 def _docs(spark, rows):
@@ -123,7 +123,8 @@ def test_decontaminate_counts_shared_shingles(spark):
     clean = "p q r s t u"
     df = _docs(spark, [(0, bench), (1, contaminated), (2, clean)])
     out = curation.decontaminate(
-        df, "doc_id", "text", F.col("doc_id") == 0, k=3
+        dedup.doc_shingle_frame(df, "doc_id", "text", k=3), "doc_id",
+        F.col("doc_id") == 0,
     ).collect()
     assert len(out) == 1
     assert out[0]["doc_id"] == 1 and out[0]["n_shared"] == 1
@@ -131,7 +132,9 @@ def test_decontaminate_counts_shared_shingles(spark):
 
 def test_decontaminate_excludes_benchmark_docs(spark):
     df = _docs(spark, [(0, "a b c d"), (5, "a b c d")])
-    out = curation.decontaminate(df, "doc_id", "text", F.col("doc_id") == 0).collect()
+    out = curation.decontaminate(
+        dedup.doc_shingle_frame(df, "doc_id", "text"), "doc_id", F.col("doc_id") == 0
+    ).collect()
     assert [r["doc_id"] for r in out] == [5]
 
 
@@ -246,6 +249,7 @@ def test_decontaminate_predicate_on_arbitrary_columns(spark):
         "doc_id long, text string, source string",
     )
     out = curation.decontaminate(
-        df, "doc_id", "text", F.col("source") == "bench", k=3
+        dedup.doc_shingle_frame(df, "doc_id", "text", k=3), "doc_id",
+        F.col("source") == "bench",
     ).collect()
     assert [(r["doc_id"], r["n_shared"]) for r in out] == [(1, 1)]

@@ -5,8 +5,10 @@ counterparts where theory guarantees it."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_learning_practise_spark import datasets
 from flink_learning_practise_spark.datasets import load
 from flink_learning_practise_spark.operators import dedup, similarity
 
@@ -19,11 +21,11 @@ def docs(spark, sf_medium):
 def test_minhash_subset_of_exact(spark, docs):
     exact = {
         (r.id_a, r.id_b): r.jaccard
-        for r in dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.8).collect()
+        for r in dedup.ngram_jaccard_pairs(dedup.doc_shingle_frame(docs, "doc_id", "text"), "doc_id", threshold=0.8).collect()
     }
     approx = {
         (r.id_a, r.id_b): r.jaccard
-        for r in dedup.minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.8).collect()
+        for r in dedup.minhash_lsh_pairs(dedup.doc_shingle_frame(docs, "doc_id", "text"), "doc_id", threshold=0.8).collect()
     }
     # verification step makes every reported pair exact ⇒ subset with equal scores
     for pair, jac in approx.items():
@@ -40,7 +42,7 @@ def test_minhash_subset_of_exact(spark, docs):
 
 
 def test_minhash_signature_shape(spark, docs):
-    sig = dedup.minhash_signatures(docs.limit(20), "doc_id", "text").collect()
+    sig = dedup.minhash_signatures(dedup.doc_shingle_frame(docs.limit(20), "doc_id", "text"), "doc_id").collect()
     assert all(len(r.signature) == 64 for r in sig)
 
 
@@ -50,7 +52,7 @@ def test_simhash_near_dups_have_similar_text(spark, docs):
     if pairs:  # simhash hits should correlate with real shingle overlap
         exact = {
             (r.id_a, r.id_b)
-            for r in dedup.ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.5).collect()
+            for r in dedup.ngram_jaccard_pairs(dedup.doc_shingle_frame(docs, "doc_id", "text"), "doc_id", threshold=0.5).collect()
         }
         hits = sum(1 for r in pairs if (r.id_a, r.id_b) in exact)
         assert hits / len(pairs) > 0.5
@@ -261,10 +263,10 @@ def test_ngram_df_cap_drops_hot_shingles(spark):
     ]
     df = spark.createDataFrame(spam + dup, "doc_id long, text string")
     capped = dedup.ngram_jaccard_pairs(
-        df, "doc_id", "text", threshold=0.5, df_cap=20
+        dedup.doc_shingle_frame(df, "doc_id", "text"), "doc_id", threshold=0.5, df_cap=20
     ).collect()
     uncapped = dedup.ngram_jaccard_pairs(
-        df, "doc_id", "text", threshold=0.5, df_cap=10**9
+        dedup.doc_shingle_frame(df, "doc_id", "text"), "doc_id", threshold=0.5, df_cap=10**9
     ).collect()
     # "buy cheap pills" etc. have DF=200 > 20 and are dropped; every
     # spam pair shares ONLY hot shingles, so no spam pair survives, and
@@ -281,10 +283,10 @@ def test_ngram_df_cap_recall_tradeoff(spark):
     docs = [(i, "identical boilerplate text repeated everywhere") for i in range(50)]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     assert not dedup.ngram_jaccard_pairs(
-        df, "doc_id", "text", threshold=0.8, df_cap=10
+        dedup.doc_shingle_frame(df, "doc_id", "text"), "doc_id", threshold=0.8, df_cap=10
     ).collect()
     assert dedup.ngram_jaccard_pairs(
-        df, "doc_id", "text", threshold=0.8, df_cap=100
+        dedup.doc_shingle_frame(df, "doc_id", "text"), "doc_id", threshold=0.8, df_cap=100
     ).count() == 50 * 49 // 2
 
 
@@ -387,7 +389,8 @@ def test_containment_matches_bruteforce(spark):
     got = {
         (r.id_a, r.id_b): r.containment
         for r in dedup.containment_pairs(
-            df, "doc_id", "text", k=3, threshold=0.9
+            dedup.doc_shingle_frame(df, "doc_id", "text", k=3), "doc_id",
+            threshold=0.9,
         ).collect()
     }
 
@@ -416,3 +419,29 @@ def test_containment_matches_bruteforce(spark):
     assert (1, 2) in got and (2, 1) not in got
     # exact dup pair appears in both directions at 1.0
     assert got[(1, 4)] == 1.0 and got[(4, 1)] == 1.0
+
+
+def test_widen_memo_semantic_hash_probe_engages(spark, sf_small, monkeypatch):
+    """widen()'s partition-count memo must hit via the analyzed-plan
+    semanticHash on the SECOND call — if the internal probe ever starts
+    throwing on a new Spark version, widen() silently degrades to one
+    ``.rdd`` physical-planning round-trip per call; this pin makes that
+    regression loud. The second call runs with DataFrame.rdd poisoned,
+    so a memo miss cannot hide."""
+    df = datasets.load(spark, sf_small, "documents").select("doc_id")
+    dedup._WIDEN_MEMO.clear()
+    dedup.widen(df)
+    assert len(dedup._WIDEN_MEMO) == 1, (
+        "widen() did not memoize — the semanticHash probe fell back"
+    )
+    (_app, sem_hash, target), = dedup._WIDEN_MEMO.keys()
+    assert isinstance(sem_hash, int)
+    assert target == spark.sparkContext.defaultParallelism
+
+    def _poisoned_rdd(self):  # pragma: no cover - must not be reached
+        raise AssertionError("widen() memo missed: .rdd probe was paid")
+
+    monkeypatch.setattr(DataFrame, "rdd", property(_poisoned_rdd))
+    # a fresh but semantically identical plan must hit the memo
+    df2 = datasets.load(spark, sf_small, "documents").select("doc_id")
+    dedup.widen(df2)

@@ -33,9 +33,9 @@ def test_exact_dedup_hostile(spark, hostile_docs):
 
 
 def test_near_dup_tiers_hostile(spark, hostile_docs):
-    ngram = {(r.id_a, r.id_b) for r in dedup.ngram_jaccard_pairs(hostile_docs, "doc_id", "text").collect()}
+    ngram = {(r.id_a, r.id_b) for r in dedup.ngram_jaccard_pairs(dedup.doc_shingle_frame(hostile_docs, "doc_id", "text"), "doc_id").collect()}
     assert (5, 6) in ngram
-    minhash = {(r.id_a, r.id_b) for r in dedup.minhash_lsh_pairs(hostile_docs, "doc_id", "text").collect()}
+    minhash = {(r.id_a, r.id_b) for r in dedup.minhash_lsh_pairs(dedup.doc_shingle_frame(hostile_docs, "doc_id", "text"), "doc_id").collect()}
     assert (5, 6) in minhash
     simhash = {(r.id_a, r.id_b) for r in dedup.simhash_pairs(hostile_docs, "doc_id", "text").collect()}
     assert (5, 6) in simhash

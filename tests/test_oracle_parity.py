@@ -83,3 +83,41 @@ def test_parity_zero_documents(spark, sf_small, tmp_path, name):
     pq.write_table(schema.empty_table(), tmp_path / "documents.parquet")
     errors = check_query(spark, name, str(tmp_path))
     assert not errors, f"{name}: " + "; ".join(errors)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_dedup_minhash_lsh",
+        "q_dedup_containment",
+        "q_decontaminate_neardup",
+        "q_ngram_novelty",
+        "q_curation_funnel",
+        "q_decontaminate",
+        "q_dedup_ngram_jaccard",
+        "q_gopher_quality",
+    ],
+)
+def test_parity_null_text(spark, sf_small, tmp_path, name):
+    """sf0.001 with ``text`` NULL where doc_id % 7 == 3 (71 of 500
+    documents). A NULL-text document has no shingles, as in the
+    oracle's shingle CTE, so it pairs with nothing; and a NULL ``keep``
+    fails the curation funnel's quality gate, as COALESCE(keep, FALSE)
+    does in the oracle."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for f in os.listdir(sf_small):
+        shutil.copy(os.path.join(sf_small, f), tmp_path / f)
+    docs = pq.read_table(os.path.join(sf_small, "documents.parquet"))
+    i = docs.schema.get_field_index("text")
+    text = [
+        None if d % 7 == 3 else t
+        for d, t in zip(docs["doc_id"].to_pylist(), docs["text"].to_pylist())
+    ]
+    docs = docs.set_column(i, docs.schema.field(i), pa.array(text, pa.string()))
+    pq.write_table(docs, tmp_path / "documents.parquet")
+    errors = check_query(spark, name, str(tmp_path))
+    assert not errors, f"{name}: " + "; ".join(errors)
